@@ -69,12 +69,8 @@ object Bench {
       // parallelism comes from file count.
       .config("spark.sql.files.openCostInBytes",
         sys.env.getOrElse("SPARK_GRAFT_OPENCOST", (256 * 1024).toString))
-      // 48 queries × several whole-stage-codegen units each overflow the
-      // default 100-entry generated-class cache EVERY pass, so each timed
-      // rep re-runs janino on code the warm-up already compiled — raise
-      // the cache so reps measure the query, not the compiler (static
-      // conf: must be set before the session exists)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
+      // reps measure the query, not the compiler (see Codegen)
+      .config("spark.sql.codegen.cache.maxEntries", Codegen.cacheMaxEntries)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "localhost")

@@ -377,11 +377,10 @@ object ScaleSmoke {
       .config("spark.sql.extensions",
         "graft.functions.GraftSparkExtensions")
       .config("spark.sql.adaptive.enabled", "true")
-      // the banded-embedding plans (36+ hyperplane dot products inlined
-      // per row) compile large whole-stage-codegen units; the default
-      // 100-entry generated-class cache evicts them mid-smoke and the
-      // recompiles made ann/lsh entry walls swing 3-7x run to run
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
+      // default-sized, the generated-class cache evicted the
+      // banded-embedding plans mid-smoke and the recompiles made ann/lsh
+      // entry walls swing 3-7x run to run (see Codegen)
+      .config("spark.sql.codegen.cache.maxEntries", Codegen.cacheMaxEntries)
       // same session geometry as Bench: a 48 GiB single-JVM "executor"
       // broadcasts a 20 MB dimension without blinking, but the stock
       // 10 MB threshold forces the ANN verify joins (40k × 520 B

@@ -13,10 +13,16 @@ import org.apache.spark.sql.functions._
   * account predicates into the store scan and prunes columns; nothing here
   * collects except the intentionally-scalar results (tax sums), which are
   * single-row aggregates.
+  *
+  * Money sums are exact: every sum adds integer cents
+  * ([[Store.cents]] of `amount`) and converts to euros once, at the end.
+  * A long sum does not depend on row order, so Catalyst also drops
+  * [[Store.load]]'s global sort beneath these aggregates; a `double` sum
+  * would keep it.
   */
 object Analysis {
 
-  private val mainAccounts = Seq("giro", "gesa", "common")
+  private[finance] val mainAccounts = Seq("giro", "gesa", "common")
 
   /** Null-safe case-insensitive regex containment — pandas
     * `str.contains(pat, case=False, na=False)`.
@@ -81,18 +87,66 @@ object Analysis {
     "einnahmen::gehalt::andreas", "einnahmen::gehalt::gesa",
     "einnahmen::dividende")
 
+  // The report's row predicates, year-free. The lazy queries filter by
+  // them and [[reportSummary]] sums under them, so each report number has
+  // exactly one definition.
+
+  private[finance] def inYear(yr: Int): Column = year(col("book_date")) === yr
+
+  private[finance] def isIncome: Column = col("cat").isin(incomeCats: _*)
+
+  /** Expenses exclude intern/einnahmen category prefixes and transfers,
+    * main accounts only.
+    */
+  private[finance] def isExpense: Column =
+    !coalesce(col("cat"), lit("")).startsWith("intern") &&
+      !coalesce(col("cat"), lit("")).startsWith("einnahmen") &&
+      col("transfer_category").isNull &&
+      col("account").isin(mainAccounts: _*)
+
+  private[finance] def isElectricity: Column =
+    containsCiRe(col("party"), "Naturstrom")
+
+  private[finance] def isHousingFee: Column = col("cat") === "wohnen::wohngeld"
+
+  private[finance] def isPropertyTax: Column =
+    col("amount") < 0 && containsCiRe(col("purpose"), "Grundst")
+
+  private[finance] def isLoanPayment: Column =
+    col("account") === "common" &&
+      coalesce(col("purpose"), lit("")).contains("Darl.-Leistung")
+
+  /** `amount` as exact integer cents — the unit every money sum adds. */
+  private[finance] def amountCents: Column = Store.cents(col("amount"))
+
+  /** A cents sum as euros. */
+  private[finance] def euros(cents: Column): Column = cents / 100.0
+
+  /** Q17's per-row value: the "Zinsen 1.234,56" part of a loan payment's
+    * purpose ("... Tilgung 898,22 Zinsen 140,12") as exact cents — the
+    * digits with the German separators removed (the pattern pins exactly
+    * two decimals). NULL on other rows and on a loan payment without a
+    * Zinsen part, which `sum` then skips, like pandas' NaN from `extract`.
+    * `try_cast`, not `cast`: ANSI mode throws on the empty extract.
+    */
+  private[finance] def loanInterestCents: Column = {
+    val zinsen = regexp_extract(col("purpose"), "Zinsen\\s+([\\d.]+,\\d{2})", 1)
+    when(isLoanPayment, regexp_replace(zinsen, "[.,]", "").try_cast("long"))
+  }
+
   /** Q3 (panda_analysis.py:83-96): income transactions for a year. */
   def income(pc: DataFrame, yr: Int): DataFrame =
-    pc.filter(year(col("book_date")) === yr && col("cat").isin(incomeCats: _*))
+    pc.filter(inYear(yr) && isIncome)
 
   /** Q4 (panda_analysis.py:100-122): per-category income sums + an
-    * 'Overall Sum' grand-total row.
+    * 'Overall Sum' grand-total row (0 for a year without income, as the
+    * pandas sum of an empty frame).
     */
   def incomeOverview(pc: DataFrame, yr: Int): DataFrame = {
     val in = income(pc, yr)
-    val byCat = in.groupBy("cat").agg(sum("amount").as("category_sum"))
+    val byCat = in.groupBy("cat").agg(euros(sum(amountCents)).as("category_sum"))
     val total = in.agg(lit("Overall Sum").as("cat"),
-      sum("amount").as("category_sum"))
+      euros(coalesce(sum(amountCents), lit(0L))).as("category_sum"))
     byCat.orderBy("cat").unionByName(total)
   }
 
@@ -100,32 +154,31 @@ object Analysis {
     * einnahmen category prefixes and transfers, main accounts only.
     */
   def expenses(pc: DataFrame, yr: Int): DataFrame =
-    pc.filter(year(col("book_date")) === yr &&
-      !(coalesce(col("cat"), lit("")).startsWith("intern")) &&
-      !(coalesce(col("cat"), lit("")).startsWith("einnahmen")) &&
-      col("transfer_category").isNull &&
-      col("account").isin(mainAccounts: _*))
+    pc.filter(inYear(yr) && isExpense)
 
   /** Q6 (panda_analysis.py:148-190): expense overview pivoted by account,
-    * with per-category totals and an 'Overall Sum' row. The reference's
-    * groupby+unstack+map dance is a single groupBy+pivot here.
+    * with per-category totals and an 'Overall Sum' row (zeros for a year
+    * without expenses). The reference's groupby+unstack+map dance is a
+    * single groupBy+pivot here.
     */
   def expenseOverview(pc: DataFrame, yr: Int): DataFrame = {
     val ex = expenses(pc, yr)
       .withColumn("cat", coalesce(col("cat"), lit("Uncategorized")))
+      .withColumn("graft_cents", amountCents)
     val pivoted = ex.groupBy("cat")
       .pivot("account", mainAccounts)
-      .agg(sum("amount"))
-      .na.fill(0.0, mainAccounts)
-    val withTotal = ex.groupBy("cat").agg(sum("amount").as("category_sum"))
+      .agg(sum("graft_cents"))
+      .na.fill(0L, mainAccounts)
+    val withTotal = ex.groupBy("cat").agg(sum("graft_cents").as("category_sum"))
       .join(pivoted, Seq("cat"))
-      .select("cat", "category_sum", "giro", "gesa", "common")
     val overall = ex.agg(
-      lit("Overall Sum").as("cat"), sum("amount").as("category_sum"),
-      sum(when(col("account") === "giro", col("amount")).otherwise(0)).as("giro"),
-      sum(when(col("account") === "gesa", col("amount")).otherwise(0)).as("gesa"),
-      sum(when(col("account") === "common", col("amount")).otherwise(0)).as("common"))
-    withTotal.orderBy("cat").unionByName(overall)
+      lit("Overall Sum").as("cat"),
+      coalesce(sum("graft_cents"), lit(0L)).as("category_sum") +:
+      mainAccounts.map(a => coalesce(sum(when(col("account") === a,
+        col("graft_cents"))), lit(0L)).as(a)): _*)
+    val columns = ("category_sum" +: mainAccounts).map(c => euros(col(c)).as(c))
+    withTotal.select(col("cat") +: columns: _*).orderBy("cat")
+      .unionByName(overall.select(col("cat") +: columns: _*))
   }
 
   /** Q7 (panda_analysis.py:193-198): giro credits for a year. */
@@ -170,38 +223,43 @@ object Analysis {
     */
   def scalarSum(df: DataFrame, label: String): DataFrame =
     df.agg(lit(label).as("position"),
-      coalesce(sum("amount"), lit(0.0)).as("total"))
+      coalesce(euros(sum(amountCents)), lit(0.0)).as("total"))
 
   def electricity(pc: DataFrame, yr: Int): DataFrame =
-    pc.filter(containsCiRe(col("party"), "Naturstrom") &&
-      year(col("book_date")) === yr)
+    pc.filter(isElectricity && inYear(yr))
 
   def housingFees(pc: DataFrame, yr: Int): DataFrame =
-    pc.filter(col("cat") === "wohnen::wohngeld" && year(col("book_date")) === yr)
+    pc.filter(isHousingFee && inYear(yr))
 
   def propertyTax(pc: DataFrame, yr: Int): DataFrame =
-    pc.filter(year(col("book_date")) === yr && col("amount") < 0 &&
-      containsCiRe(col("purpose"), "Grundst"))
+    pc.filter(inYear(yr) && isPropertyTax)
 
   def mobilePhone(pc: DataFrame, yr: Int, needle: String): DataFrame =
-    pc.filter(year(col("book_date")) === yr &&
+    pc.filter(inYear(yr) &&
       coalesce(col("purpose"), lit("")).contains(needle))
 
-  /** German-format amount string "1.234,56" → double
-    * (panda_analysis.py:344-350 `_euro`).
-    */
-  def euro(c: Column): Column =
-    regexp_replace(regexp_replace(c, "\\.", ""), ",", ".").cast("double")
-
   /** Q17 (panda_analysis.py:351-354): loan INTEREST extracted from free-text
-    * purpose ("... Tilgung 898,22 Zinsen 140,12") and summed.
+    * purpose ([[loanInterestCents]]) and summed.
     */
   def loanInterest(pc: DataFrame, yr: Int): DataFrame =
-    pc.filter(year(col("book_date")) === yr && col("account") === "common" &&
-        coalesce(col("purpose"), lit("")).contains("Darl.-Leistung"))
-      .select(euro(regexp_extract(col("purpose"),
-        "Zinsen\\s+([\\d.]+,\\d{2})", 1)).as("zinsen"))
-      .agg(coalesce(sum("zinsen"), lit(0.0)).as("total"))
+    pc.filter(inYear(yr) && isLoanPayment)
+      .agg(coalesce(euros(sum(loanInterestCents)), lit(0.0)).as("total"))
+
+  /** The year's report in one pass: per (cat, account), the cents sums
+    * under each report predicate — NULL where no row of the group
+    * matches it. [[Report]] builds all three tables from these rows on
+    * the driver; they are bounded by #categories × #accounts, not by
+    * data volume. Every aggregate is a long sum, so Catalyst removes
+    * [[Store.load]]'s sort and the store is scanned once, unsorted.
+    */
+  def reportSummary(pc: DataFrame, yr: Int): DataFrame =
+    pc.filter(inYear(yr)).groupBy("cat", "account").agg(
+      sum(when(isIncome, amountCents)).as("income_cents"),
+      sum(when(isExpense, amountCents)).as("expense_cents"),
+      sum(when(isElectricity, amountCents)).as("electricity_cents"),
+      sum(when(isHousingFee, amountCents)).as("housing_cents"),
+      sum(when(isPropertyTax, amountCents)).as("property_tax_cents"),
+      sum(loanInterestCents).as("loan_interest_cents"))
 
   /** Q18-Q20 (panda_analysis.py:386-450): home-office deduction table — AfA
     * rows (constants ÷ depreciation years) unioned with the year's running
@@ -217,7 +275,6 @@ object Analysis {
     import spark.implicits._
     val afa = afaCosts.toDF("position", "cost")
       .select(col("position"), (col("cost") / afaYears).as("gesamtkosten"))
-    val y = year(col("book_date")) === yr
     val running = Seq(
       loanInterest(pc, yr).select(lit("Darlehenszinsen").as("position"),
         col("total").as("gesamtkosten")),

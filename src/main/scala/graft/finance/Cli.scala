@@ -19,6 +19,10 @@ object Cli {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // a visit's generated classes outnumber Spark's default cache: without
+      // this every import and report recompiles them (see graft.Codegen)
+      .config("spark.sql.codegen.cache.maxEntries",
+        graft.Codegen.cacheMaxEntries)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -2,7 +2,7 @@ package graft.finance
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 
 /** Self-contained HTML report sink — the downstream artifact the reference
   * pipeline feeds (/root/reference/reports/finanzberatung-report.html, a
@@ -17,9 +17,14 @@ import org.apache.spark.sql.DataFrame
   * German-formatted ("1.234,56"), values HTML-escaped, no external assets —
   * one file a tax advisor can open offline.
   *
-  * The queries stay distributed until the final collect of each (tiny,
-  * bounded: #categories / #positions rows) result table — the report cost
-  * is the queries, not the rendering.
+  * The report is ONE aggregate pass over the year ([[Analysis.reportSummary]]:
+  * exact-cents sums per category and account under each report predicate),
+  * collected once — bounded by #categories × #accounts rows — and shaped
+  * into the three tables on the driver. The numbers equal the collected
+  * lazy queries row for row (ReportSpec); what the single pass saves is
+  * their nine store scans, the sort of [[Store.load]] under each, and most
+  * of their Spark jobs (18 → 2 per render in the ledger benchmark on 4
+  * cores).
   */
 object Report {
 
@@ -76,60 +81,79 @@ object Report {
   private def section(no: Int, title: String, html: String): String =
     s"""<section><h2><em class="no">$no</em>${esc(title)}</h2>\n$html\n</section>"""
 
-  /** Categories alphabetical, the 'Overall Sum' row last — imposed on the
-    * COLLECTED rows, not inherited from the plan: Spark does not guarantee
-    * that `orderBy(...).unionByName(total)` order survives collect-time
-    * partition concatenation across plan changes (AQE, partition count), and
-    * the report is byte-golden-tested.
-    */
-  private def stableRows(rows: Array[Seq[Any]]): Seq[Seq[Any]] = {
-    val (total, cats) = rows.partition(_.headOption.contains("Overall Sum"))
-    (cats.sortBy(_.head.asInstanceOf[String]) ++ total).toSeq
-  }
-
-  /** Build the full report document for a year. `pc` is the categorized
-    * store frame (post-[[Categorizer.addCat]]).
-    */
-  /** The report sink's COLLECT CONTRACT, enforced: each collected frame
-    * is a per-category / per-position AGGREGATE — row count bounded by
-    * the category vocabulary (~dozens), never by data volume. A future
-    * schema change that accidentally turns one of these into a
-    * row-level frame would otherwise become a silent driver-side
-    * data-volume collect; fail loudly instead. */
-  private def boundedCollect(df: DataFrame,
-      what: String): Array[org.apache.spark.sql.Row] = {
+  /** The report sink's COLLECT CONTRACT, enforced: the collected frame
+    * is an AGGREGATE — row count bounded by the category vocabulary
+    * (~dozens) per account, never by data volume. A future schema change
+    * that accidentally turns it into a row-level frame would otherwise
+    * become a silent driver-side data-volume collect; fail loudly
+    * instead. */
+  private def boundedCollect(df: DataFrame): Array[Row] = {
+    val limit = 1000 * TransactionSchema.ibanAccountMap.values.toSet.size
     val rows = df.collect()
-    require(rows.length <= 1000,
-      s"report sink: $what collected ${rows.length} rows — this frame " +
+    require(rows.length <= limit,
+      s"report sink: collected ${rows.length} summary rows — this frame " +
         "must stay a category-level aggregate (bounded by the category " +
         "vocabulary), not a row-level collect")
     rows
   }
 
+  /** A report's three tables as rendered, before formatting: (category,
+    * sum) income rows, (category, sum, giro, gesa, common) expense rows —
+    * both categories alphabetical, the 'Overall Sum' row last — and
+    * (position, gesamtkosten, raumkosten) office rows in presentation
+    * order: AfA entries as given, then the running costs.
+    */
+  private[finance] final case class Tables(
+      income: Seq[Seq[Any]], expense: Seq[Seq[Any]], office: Seq[Seq[Any]])
+
+  /** Build the year's tables from one collected [[Analysis.reportSummary]].
+    * Ordering is imposed here, on the driver, never inherited from a plan —
+    * the report is byte-golden-tested. Cents add up as longs and turn into
+    * euros once per cell, so every cell equals the lazy query's value.
+    */
+  private[finance] def tables(pc: DataFrame, yr: Int,
+      afaCosts: Seq[(String, Double)], afaYears: Int,
+      officeRatio: Double): Tables = {
+    val summary = boundedCollect(Analysis.reportSummary(pc, yr)).toSeq
+    def euros(cents: Long): Double = cents / 100.0
+    /** (cat, account, cents) of the groups where `column`'s sum is set. */
+    def matched(column: String): Seq[(String, String, Long)] =
+      summary.flatMap(r => Option(r.getAs[java.lang.Long](column)).map(c =>
+        (r.getAs[String]("cat"), r.getAs[String]("account"), c.longValue)))
+    def total(rows: Seq[(String, String, Long)]): Long = rows.map(_._3).sum
+
+    val incomeRows = matched("income_cents")
+    val income = incomeRows.groupBy(_._1).toSeq.sortBy(_._1)
+      .map { case (cat, rows) => Seq[Any](cat, euros(total(rows))) } :+
+      Seq[Any]("Overall Sum", euros(total(incomeRows)))
+
+    val expenseRows = matched("expense_cents")
+    def byAccount(rows: Seq[(String, String, Long)]): Seq[Double] =
+      euros(total(rows)) +:
+        Analysis.mainAccounts.map(a => euros(total(rows.filter(_._2 == a))))
+    val expense = expenseRows.groupBy(r => Option(r._1).getOrElse("Uncategorized"))
+      .toSeq.sortBy(_._1)
+      .map { case (cat, rows) => cat +: byAccount(rows) } :+
+      ("Overall Sum" +: byAccount(expenseRows))
+
+    def cost(column: String): Double = euros(total(matched(column)))
+    val office = (afaCosts.map { case (position, c) => position -> c / afaYears } ++ Seq(
+      "Darlehenszinsen" -> cost("loan_interest_cents"),
+      "Stromkosten" -> -cost("electricity_cents"),
+      "Hausgeld" -> -cost("housing_cents"),
+      "Grundsteuer" -> -cost("property_tax_cents")))
+      .map { case (position, g) => Seq[Any](position, g, g * officeRatio) }
+    Tables(income, expense, office)
+  }
+
+  /** Build the full report document for a year. `pc` is the categorized
+    * store frame (post-[[Categorizer.addCat]]).
+    */
   def render(pc: DataFrame, yr: Int,
       afaCosts: Seq[(String, Double)], afaYears: Int,
       officeRatio: Double): String = {
-    val income = stableRows(boundedCollect(
-      Analysis.incomeOverview(pc, yr), "income overview")
-      .map(r => Seq[Any](r.getAs[String]("cat"),
-        r.getAs[Double]("category_sum"))))
-    val expense = stableRows(boundedCollect(
-      Analysis.expenseOverview(pc, yr), "expense overview")
-      .map(r => Seq[Any](r.getAs[String]("cat"),
-        r.getAs[Double]("category_sum"), r.getAs[Double]("giro"),
-        r.getAs[Double]("gesa"), r.getAs[Double]("common"))))
-    // Office positions in presentation order: AfA entries as given, then the
-    // fixed running-cost positions (Analysis.homeOfficeReport's union order,
-    // re-imposed driver-side for the same order-stability reason).
-    val officeOrder = (afaCosts.map(_._1) ++
-      Seq("Darlehenszinsen", "Stromkosten", "Hausgeld", "Grundsteuer"))
-      .zipWithIndex.toMap
-    val office = boundedCollect(
-      Analysis.homeOfficeReport(pc, yr, afaCosts, afaYears,
-        officeRatio), "home-office report")
-      .map(r => Seq[Any](r.getAs[String]("position"),
-        r.getAs[Double]("gesamtkosten"), r.getAs[Double]("raumkosten")))
-      .sortBy(r => officeOrder.getOrElse(r.head.asInstanceOf[String], Int.MaxValue))
+    val Tables(income, expense, office) =
+      tables(pc, yr, afaCosts, afaYears, officeRatio)
     val officeTotal = Seq[Any]("Overall Sum",
       office.map(_(1).asInstanceOf[Double]).sum,
       office.map(_(2).asInstanceOf[Double]).sum)
@@ -146,13 +170,13 @@ object Report {
        |<header><h1>Finanzübersicht $yr</h1>
        |<p class="when">pandacount-spark · Berichtsjahr $yr</p></header>
        |${section(1, s"Einnahmen $yr", table(
-            Seq("Kategorie" -> false, "Summe" -> true), income.toSeq))}
+            Seq("Kategorie" -> false, "Summe" -> true), income))}
        |${section(2, s"Ausgaben $yr", table(
             Seq("Kategorie" -> false, "Summe" -> true, "giro" -> true,
-              "gesa" -> true, "common" -> true), expense.toSeq))}
+              "gesa" -> true, "common" -> true), expense))}
        |${section(3, s"Arbeitszimmer $yr (Anteil ${eur(officeRatio * 100)} %)",
           table(Seq("Position" -> false, "Gesamtkosten" -> true,
-            "Raumkosten" -> true), office.toSeq :+ officeTotal))}
+            "Raumkosten" -> true), office :+ officeTotal))}
        |<footer><p class="when">Erzeugt aus dem Transaktions-Store ·
        |alle Beträge in EUR</p></footer>
        |</main></body>

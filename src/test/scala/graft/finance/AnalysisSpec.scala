@@ -3,6 +3,7 @@ package graft.finance
 import java.sql.Date
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
@@ -56,6 +57,20 @@ class AnalysisSpec extends SparkSpec {
   test("loan interest: regex-extract German amounts from purpose, summed") {
     val out = Analysis.loanInterest(base, 2024).as[Double].head()
     assert(math.abs(out - (140.12 + 1138.40)) < 1e-9)
+  }
+
+  test("loan interest: a Darl.-Leistung purpose without a Zinsen part adds nothing") {
+    // pandas: `extract` gives NaN for the row and `sum` skips it; a cast of
+    // the empty extract would throw CAST_INVALID_INPUT under ANSI mode
+    val d = base.unionByName(pc(
+      ("common", "2024-07-01", "Bank", "Rechnung Darl.-Leistung 607 Tilgung 500,00", null, -500.0, "wohnen::rate")))
+    val out = Analysis.loanInterest(d, 2024).as[Double].head()
+    assert(math.abs(out - (140.12 + 1138.40)) < 1e-9)
+    val summary = Analysis.reportSummary(d, 2024)
+      .agg(sum("loan_interest_cents")).as[Long].head()
+    assert(summary === 14012L + 113840L)
+    val onlyThatRow = d.filter(col("purpose").endsWith("Tilgung 500,00"))
+    assert(Analysis.loanInterest(onlyThatRow, 2024).as[Double].head() === 0.0)
   }
 
   test("uncategorized cumsum: running sum over amount-ascending order") {
