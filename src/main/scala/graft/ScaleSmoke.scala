@@ -1668,17 +1668,10 @@ object ScaleSmoke {
       .select("account", "book_date", "valuta_date", "party", "book_text",
         "purpose", "amount_cents", "balance_cents", "transfer_category",
         "category", "category_manual", "fingerprint", "imported_at")
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      graft.finance.TransactionSchema.storeSchema)
-    val (seeded, releaseSeed) = Store.upsertReleasable(empty, prepared)
-    val store = seeded.persist()
+    val store = Store.upsert(Store.empty(spark), prepared).persist()
     store.count()
-    releaseSeed()
-    timeSkewAudited(spark, "upsert_merge_skew10pct") {
-      val (merged, _) = Store.upsertReleasable(store, prepared)
-      merged
-    }
+    timeSkewAudited(spark, "upsert_merge_skew10pct")(
+      Store.upsert(store, prepared))
     }
 
     // Adaptive skew join under the same 10 % hot key: unsalted, the hot

@@ -43,44 +43,17 @@ object Analysis {
       .select("account", "book_date", "party", "purpose", "amount", "cat")
       .orderBy(asc("amount"))
 
-  /** Q2 (panda_analysis.py:64-79): cumulative-sum curve over Q1.
-    *
-    * Round-20: the curve used to be ONE global-order window
-    * (`Window.orderBy(amount)`), which moves every row to a single
-    * partition — the WindowExec "No Partition Defined" funnel that
-    * serializes the whole slice through one task at scale. Replaced
-    * with the repo's two-pass distributed prefix sum
-    * ([[graft.finance.Store]]'s id-assignment pattern): range-
-    * repartition on the sort key (equal keys co-locate, partition i's
-    * range precedes partition i+1's), a PER-PARTITION running sum
-    * (window partitioned by `spark_partition_id()` — parallel), plus
-    * each earlier partition's total via a ≤(#partitions)-row aggregate
-    * cumulated by a tiny window and broadcast back. The persist pins
-    * one partition layout for both consumers of the sorted frame (the
-    * offsets aggregate and the main pass — the Store.scala:118 note).
-    * Same curve: per-partition left-fold + in-order partition offsets
-    * compose to the same running sum over the same amount-ascending
-    * order (ties co-locate, their intra-order as unspecified as the
-    * single-partition window's was).
+  /** Q2 (panda_analysis.py:64-79): cumulative-sum curve over Q1, in exact
+    * cents like every other money sum. One ordered window, in one task: the
+    * input is one user's uncategorized rows of one year, a few hundred, so
+    * a distributed prefix sum would only add jobs. The order among rows of
+    * equal amount is unspecified.
     */
   def uncategorizedCumsum(pc: DataFrame, yr: Int): DataFrame = {
-    val sorted = uncategorized(pc, yr)
-      .repartitionByRange(asc("amount"))
-      .sortWithinPartitions(asc("amount"))
-      .transform(graft.CacheHandles.persistTracked)
-    val byPid = sorted.withColumn("graft_pid", spark_partition_id())
-    val pidW = Window.orderBy("graft_pid")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = byPid.groupBy("graft_pid")
-      .agg(sum("amount").as("graft_psum"))
-      .select(col("graft_pid"),
-        coalesce(sum("graft_psum").over(pidW), lit(0.0)).as("graft_off"))
-    val runW = Window.partitionBy("graft_pid").orderBy(asc("amount"))
+    val running = Window.orderBy(asc("amount"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    byPid.join(broadcast(offsets), Seq("graft_pid"))
-      .withColumn("cumulative_sum",
-        col("graft_off") + sum("amount").over(runW))
-      .select((sorted.columns.map(col) :+ col("cumulative_sum")).toSeq: _*)
+    uncategorized(pc, yr)
+      .withColumn("cumulative_sum", euros(sum(amountCents).over(running)))
   }
 
   val incomeCats: Seq[String] = Seq(

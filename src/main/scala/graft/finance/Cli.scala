@@ -1,6 +1,6 @@
 package graft.finance
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Command-line entry points mirroring the reference CLI
@@ -28,22 +28,11 @@ object Cli {
     s
   }
 
-  private def storeExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  private def loadOrEmpty(spark: SparkSession, path: String): DataFrame =
-    if (storeExists(spark, path)) spark.read.parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      TransactionSchema.storeSchema)
-
   /** Import pipeline (§3.1): read CSVs → dedup against store → categorize →
     * upsert → save.
     */
   def ingImport(spark: SparkSession, storePath: String, csvPaths: String): Unit = {
-    val existing = loadOrEmpty(spark, storePath)
+    val existing = Store.loadOrEmpty(spark, storePath)
     val storeAsRaw = existing
       .withColumn("amount", col("amount_cents") / 100.0)
       .withColumn("balance", col("balance_cents") / 100.0)
@@ -61,10 +50,7 @@ object Cli {
       .select("account", "book_date", "valuta_date", "party", "book_text",
         "purpose", "amount_cents", "balance_cents", "transfer_category",
         "category", "category_manual", "fingerprint", "imported_at")
-    val (next, release) = Store.upsertReleasable(existing, prepared)
-    // finally: a failed save must not leak the cache entry either — a
-    // session retrying failed batches would otherwise accumulate one per attempt
-    try Store.save(next, storePath) finally release()
+    Store.save(Store.upsert(existing, prepared), storePath)
     println(s"Stored $storePath with ${spark.read.parquet(storePath).count()} rows in total")
   }
 
@@ -72,7 +58,7 @@ object Cli {
     * and fingerprints are stable → idempotent).
     */
   def categorize(spark: SparkSession, storePath: String): Unit = {
-    val existing = loadOrEmpty(spark, storePath)
+    val existing = Store.loadOrEmpty(spark, storePath)
     val asRaw = existing
       .withColumn("amount", col("amount_cents") / 100.0)
       .withColumn("balance", col("balance_cents") / 100.0)
@@ -81,8 +67,7 @@ object Cli {
       .select("account", "book_date", "valuta_date", "party", "book_text",
         "purpose", "amount_cents", "balance_cents", "transfer_category",
         "category", "category_manual", "fingerprint", "imported_at")
-    val (next, release) = Store.upsertReleasable(existing, prepared)
-    try Store.save(next, storePath) finally release()
+    Store.save(Store.upsert(existing, prepared), storePath)
     println(s"Stored $storePath with ${spark.read.parquet(storePath).count()} rows in total")
   }
 

@@ -1,6 +1,6 @@
 package graft.finance
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -57,7 +57,7 @@ object IngCsv {
     */
   private[graft] def project(lines: DataFrame): DataFrame = {
     val raw = lines
-      .select(col("path"),
+      .select(col("path"), col("line"),
         from_csv(col("line"), TransactionSchema.ingRawSchema,
           Map("sep" -> ";")).as("r"))
 
@@ -68,17 +68,25 @@ object IngCsv {
       col("r.party").as("party"),
       col("r.book_text").as("book_text"),
       col("r.purpose").as("purpose"),
-      germanDecimal(col("r.Betrag")).as("amount"),
-      germanDecimal(col("r.Saldo")).as("balance"))
+      germanDecimal(col("r.Betrag"), col("path"), col("line")).as("amount"),
+      germanDecimal(col("r.Saldo"), col("path"), col("line")).as("balance"))
   }
 
   /** `DD.MM.YYYY` → DateType (dayfirst parse, panda.py:60-61). */
   def germanDate(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     to_date(c, "d.M.yyyy")
 
-  /** `"1.234,56"` → 1234.56d: strip '.'-thousands, ','→'.' (panda.py:62-67). */
-  def germanDecimal(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    regexp_replace(regexp_replace(c, "\\.", ""), ",", ".").cast("double")
+  /** `"1.234,56"` → 1234.56d: strip '.'-thousands, ','→'.' (panda.py:62-67).
+    * An empty field is NULL; a non-empty one that does not parse raises an
+    * error naming the statement file (`path`) and its raw `line`.
+    */
+  def germanDecimal(c: Column, path: Column, line: Column): Column = {
+    val parsed =
+      regexp_replace(regexp_replace(c, "\\.", ""), ",", ".").try_cast("double")
+    when(c.isNotNull && parsed.isNull, raise_error(concat(
+      lit("malformed amount '"), c, lit("' in "), path, lit(": "), line)))
+      .otherwise(parsed)
+  }
 
   /** Filename stem `<prefix>_<IBAN>_<suffix>` → account name via the 5-entry
     * IBAN map; unknown IBAN raises (the reference KeyErrors, panda.py:31-42).

@@ -1,6 +1,8 @@
 package graft.finance
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Durable transaction store: fingerprinting, cents encoding, id assignment
@@ -9,7 +11,7 @@ import org.apache.spark.sql.functions._
   * Reference semantics (/root/reference/panda.py:560-733) re-expressed as a
   * deterministic two-phase Spark job over a parquet system-of-record:
   *
-  *   - money persists as exact integer cents via banker's rounding
+  *   - money is stored as exact integer cents via banker's rounding
   *     (pandas `.round()` is half-to-even → Spark `bround`, panda.py:678-679);
   *   - `fingerprint` = sha256 of the 7-field natural key with NULL→"" (amount
   *     NULL→"0"), '|'-separated, UTF-8 (panda.py:569-592) — computed with the
@@ -22,13 +24,15 @@ import org.apache.spark.sql.functions._
   *     rows burn their candidate ids, exactly like the reference
   *     (panda.py:685-691).
   *
-  * Scale posture: the merge is one shuffle join keyed on fingerprint. At
-  * fleet scale, write the store bucketed by fingerprint
+  * Scale posture: a store is one user's ledger, a person's bank history
+  * of at most some 1e5 rows, and a batch is that user's statements. So the
+  * ids come from one ordered window over the batch (one task), nothing is
+  * cached, and [[save]] commits crash-safely by renames. The merge is
+  * one shuffle join keyed on fingerprint. The bucketed layout
   * ([[saveBucketed]]: `bucketBy(n, "fingerprint")` + `partitionBy(
-  * book_year)`) so the merge join is co-located — the store side reads its
-  * buckets with NO Exchange (only the small batch shuffles) — and
-  * re-categorization jobs prune to the years they touch. StoreSpec asserts
-  * both properties on the physical plan.
+  * book_year)`) co-locates that join — the store side reads its buckets
+  * with NO Exchange — and lets year-scoped jobs prune to the years they
+  * touch. StoreSpec asserts both properties on the physical plan.
   */
 object Store {
 
@@ -72,69 +76,26 @@ object Store {
     * [[TransactionSchema.storeSchema]] columns minus ids on the batch side).
     *
     * `existing` may be empty (first import). Returns the new store content.
+    * `idBase` overrides MAX(id) for callers merging against a SLICE of the
+    * store ([[upsertBucketedYears]]): ids must continue from the GLOBAL
+    * max, not the slice's.
     */
-  def upsert(existing: DataFrame, batch: DataFrame): DataFrame =
-    upsertReleasable(existing, batch)._1
-
-  /** [[upsert]] plus a release handle that frees the internally persisted
-    * sorted batch. Import COMMANDS (Cli.ingImport / Cli.categorize /
-    * YamlStore.migrate) must call the handle after [[save]] materializes
-    * the result — otherwise a long-lived import session accumulates one
-    * MEMORY_AND_DISK entry per batch until `clearCache`. Lazy QUERY
-    * consumers (the q39 gate) may ignore the handle: their cache entry is
-    * released with the session, bounded by one entry per upsert call.
-    */
-  def upsertReleasable(existing: DataFrame, batch: DataFrame,
-      idBase: Option[Long] = None): (DataFrame, () => Unit) = {
+  def upsert(existing: DataFrame, batch: DataFrame,
+      idBase: Option[Long] = None): DataFrame = {
     val spark = existing.sparkSession
     import spark.implicits._
 
     // MAX(id)+1 offset — single tiny driver-side aggregate (panda.py:685-688).
-    // `idBase` overrides it for callers merging against a SLICE of the
-    // store ([[upsertBucketedYears]]): ids must continue from the GLOBAL
-    // max, not the slice's.
     val maxId: Long = idBase.getOrElse(
       existing.agg(coalesce(max("transaction_id"), lit(0L))).as[Long].head())
 
     // Candidate ids enumerate the WHOLE batch in canonical order; ids of
-    // conflicting rows are burned (panda.py:691). Range-repartition gives
-    // a total order ACROSS partitions (partition i's ranges precede
-    // partition i+1's), so id = maxId + (rows in earlier partitions) +
-    // (rank within my partition) — MAX(id)+position semantics with no
-    // single-partition exchange (a bare `Window.orderBy` funnels every
-    // row through one task; at 100 TB that is the whole job's
-    // bottleneck). Both pieces stay inside ONE Catalyst plan (no RDD
-    // serde seam): the within-partition rank is a `row_number` window
-    // PARTITIONED BY `spark_partition_id()` (parallel across partitions;
-    // ties in canonicalOrder get arbitrary-but-unique ranks, exactly as
-    // positional enumeration did), and the earlier-partition row counts
-    // are a ≤(#partitions)-row aggregate cumulated by a tiny window and
-    // broadcast back.
-    //
-    // NOTE: the batch is persisted because its lineage feeds two
-    // consumers (the offsets aggregate and the main join) and because
-    // `spark_partition_id()` must observe the SAME partition layout in
-    // both — the cache pins the range partitioning computed once; the
-    // cache entry lives until the import session ends (or
-    // `spark.catalog.clearCache()`).
-    val sorted = batch.drop("transaction_id")
-      .repartitionByRange(canonicalOrder: _*)
-      .sortWithinPartitions(canonicalOrder: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val byPid = sorted.withColumn("graft_pid", spark_partition_id())
-    val pidW = org.apache.spark.sql.expressions.Window.orderBy("graft_pid")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val offsets = byPid.groupBy("graft_pid")
-      .agg(count(lit(1)).as("graft_cnt"))
-      .select(col("graft_pid"),
-        coalesce(sum("graft_cnt").over(pidW), lit(0L)).as("graft_off"))
-    val rankW = org.apache.spark.sql.expressions.Window
-      .partitionBy("graft_pid").orderBy(canonicalOrder: _*)
-    val candidate = byPid.join(broadcast(offsets), Seq("graft_pid"))
+    // conflicting rows are burned (panda.py:691). Ties in canonicalOrder
+    // get arbitrary-but-unique ranks. The window runs in one task: a batch
+    // is one user's statement or ledger (see the scale posture above).
+    val candidate = batch.drop("transaction_id")
       .withColumn("transaction_id",
-        lit(maxId) + col("graft_off") + row_number().over(rankW).cast("long"))
-      .drop("graft_pid", "graft_off")
-      .select((sorted.columns :+ "transaction_id").map(col).toSeq: _*)
+        lit(maxId) + row_number().over(Window.orderBy(canonicalOrder: _*)))
 
     val updateCols = Seq("transfer_category", "category", "category_manual",
       "balance_cents")
@@ -150,17 +111,23 @@ object Store {
 
     // Full outer join on fingerprint = MERGE. Matched rows keep identity
     // columns from the store and take the 4 update columns from the batch.
-    val merged = ex.join(ba, Seq("fp"), "full_outer").select(
+    ex.join(ba, Seq("fp"), "full_outer").select(
       (identityCols.map(c =>
         coalesce(col(s"ex.$c"), col(s"ba.$c")).as(c)) ++
        updateCols.map(c =>
         when(col("ba").isNotNull, col(s"ba.$c"))
           .otherwise(col(s"ex.$c")).as(c))): _*)
       .select(TransactionSchema.storeSchema.fieldNames.map(col).toSeq: _*)
-    // blocking: at a command boundary the point is freeing executor
-    // memory BEFORE the next batch starts, not eventually
-    (merged, () => { sorted.unpersist(blocking = true); () })
   }
+
+  /** [[upsert]] with a no-op release handle. [[upsert]] caches nothing, so
+    * there is nothing to release. Kept only because the benchmark
+    * harness (`perfbench/scala/perfbench/Ledger.scala`) calls it and is
+    * changed separately from the program; remove it with the benchmark's
+    * next change.
+    */
+  def upsertReleasable(existing: DataFrame, batch: DataFrame): (DataFrame, () => Unit) =
+    (upsert(existing, batch), () => ())
 
   /** Batch-import composition (panda.py:736-745): store rows win over
     * re-imported rows on the 7-col natural key (keep='first' over the
@@ -203,7 +170,8 @@ object Store {
     * The sort only materializes at this read boundary — the store itself
     * stays unsorted so writes never pay a global sort.
     */
-  def load(spark: SparkSession, path: String): DataFrame =
+  def load(spark: SparkSession, path: String): DataFrame = {
+    recover(spark, path)
     spark.read.parquet(path)
       .orderBy(canonicalOrder: _*)
       .withColumn("amount", col("amount_cents") / 100.0)
@@ -211,6 +179,17 @@ object Store {
       .select("account", "book_date", "valuta_date", "party", "book_text",
         "purpose", "transfer_category", "category", "category_manual",
         "amount", "balance")
+  }
+
+  /** The raw store at `path` ([[TransactionSchema.storeSchema]] columns),
+    * or an empty store when none has been committed yet.
+    */
+  def loadOrEmpty(spark: SparkSession, path: String): DataFrame =
+    if (recover(spark, path)) spark.read.parquet(path) else empty(spark)
+
+  def empty(spark: SparkSession): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      TransactionSchema.storeSchema)
 
   /** The fleet-scale store layout, realized: fingerprint-bucketed,
     * `book_year`-partitioned parquet table. Properties this buys (both
@@ -234,8 +213,9 @@ object Store {
     * swapped in via DROP + RENAME — a direct `mode("overwrite")` into the
     * table the frame was read from throws (Spark refuses to overwrite a
     * relation it is scanning), which would break the system-of-record cycle
-    * `loadBucketed → upsert → saveBucketed`. The swap window (between DROP
-    * and RENAME) mirrors [[save]]'s delete-then-rename. Year-SCOPED
+    * `loadBucketed → upsert → saveBucketed`. Unlike [[save]], the swap is
+    * not crash-safe: a crash between DROP and RENAME leaves only the
+    * staging table. Year-SCOPED
     * rewrites should use [[replaceYearPartitions]] instead — a full-store
     * swap for a one-year re-categorization rewrites 100 TB to change one
     * partition.
@@ -345,26 +325,60 @@ object Store {
         if (years.contains(None)) Some(col("book_year").isNull) else None
       val pred = (inYears ++ nullYear).reduce(_ || _)
       val slice = store.filter(pred).drop("book_year")
-      val (merged, release) =
-        upsertReleasable(slice, batch, idBase = Some(maxId))
-      try replaceYearPartitions(merged, table)
-      finally release()
+      replaceYearPartitions(upsert(slice, batch, idBase = Some(maxId)), table)
     }
   }
 
-  /** Two-phase overwrite: stage to `<path>.staging`, then swap. Parquet has
-    * no in-place upsert; the staging write keeps the store readable until
-    * the swap (at fleet scale this is a partition-level replace).
+  /** Commit `df` as the store at `path`, crash-safely. The new version is
+    * written to `<path>.staging`; the committed store is renamed aside to
+    * `<path>.old`; the staging copy is renamed to `path`; only then is the
+    * old copy deleted. No step deletes the only committed copy, so a crash
+    * at any point leaves the old or the new version: at `path`, or, between
+    * the two renames, at `<path>.old`, which [[load]] and [[loadOrEmpty]]
+    * move back. Concurrent commits are not coordinated.
     */
   def save(df: DataFrame, path: String): Unit = {
-    val staging = path + ".staging"
-    df.write.mode("overwrite").parquet(staging)
     val spark = df.sparkSession
-    val dst = new org.apache.hadoop.fs.Path(path)
-    // the path's own filesystem — the store may live on a different
-    // scheme (s3a://, file:///) than the cluster's fs.defaultFS
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(dst, true)
-    fs.rename(new org.apache.hadoop.fs.Path(staging), dst)
+    recover(spark, path)
+    val staging = new Path(path + ".staging")
+    df.write.mode("overwrite").parquet(staging.toString)
+    val (dst, aside) = (new Path(path), new Path(path + ".old"))
+    val fs = fileSystem(spark, dst)
+    if (fs.exists(dst)) {
+      fs.delete(aside, true) // left by a crash after an earlier publish
+      rename(fs, dst, aside)
+    }
+    rename(fs, staging, dst)
+    fs.delete(aside, true)
   }
+
+  /** Bring back the store a crashed [[save]] left outside `path`: the old
+    * version moved aside, else a complete (`_SUCCESS`-marked) staging copy
+    * when there is no other, as a crash before the first publish leaves.
+    * Returns whether a store exists at `path`.
+    */
+  private def recover(spark: SparkSession, path: String): Boolean = {
+    val dst = new Path(path)
+    val fs = fileSystem(spark, dst)
+    if (!fs.exists(dst)) {
+      val aside = new Path(path + ".old")
+      val staging = new Path(path + ".staging")
+      if (fs.exists(aside)) rename(fs, aside, dst)
+      else if (fs.exists(new Path(staging, "_SUCCESS"))) rename(fs, staging, dst)
+    }
+    fs.exists(dst)
+  }
+
+  /** The path's own filesystem — the store may live on a different scheme
+    * (s3a://, file:///) than the cluster's fs.defaultFS.
+    */
+  private def fileSystem(spark: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** A rename onto an existing directory would nest `from` inside it, so
+    * an existing target fails the commit as well.
+    */
+  private def rename(fs: FileSystem, from: Path, to: Path): Unit =
+    if (fs.exists(to) || !fs.rename(from, to))
+      throw new java.io.IOException(s"store commit: cannot rename $from to $to")
 }

@@ -122,15 +122,8 @@ object YamlStore {
       }
     val batch = Store.withStoreColumns(filled)
       .withColumn("imported_at", current_timestamp())
-    val existing =
-      if (Files.exists(Paths.get(storePath)))
-        spark.read.parquet(storePath)
-      else
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row], TransactionSchema.storeSchema)
-    val (next, release) = Store.upsertReleasable(existing, batch)
-    // finally: release the upsert's cache entry even when the save fails
-    try Store.save(next, storePath) finally release()
+    Store.save(Store.upsert(Store.loadOrEmpty(spark, storePath), batch),
+      storePath)
     val nStore = spark.read.parquet(storePath).count()
     if (nStore == nYaml) {
       println(s"✓ Migration successful! ($nStore rows)")

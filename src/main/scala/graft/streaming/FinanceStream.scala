@@ -127,26 +127,12 @@ object FinanceStream {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val sess = batch.sparkSession
-        // the PATH's filesystem, not the default one — storePath may live
-        // on a different scheme (s3a://, file:///) than fs.defaultFS
-        val storeP = new org.apache.hadoop.fs.Path(storePath)
-        val fs = storeP.getFileSystem(sess.sparkContext.hadoopConfiguration)
-        val existing =
-          if (fs.exists(storeP))
-            sess.read.parquet(storePath)
-          else sess.createDataFrame(
-            sess.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            TransactionSchema.storeSchema)
         val prepared = batch
           .withColumn("imported_at", current_timestamp())
           .select(TransactionSchema.storeSchema.fieldNames.toSeq
             .filterNot(_ == "transaction_id").map(col): _*)
-        // the command pattern: release the upsert's internal cache entry
-        // once the save materialized it (Store.upsertReleasable scaladoc)
-        val (merged, release) = Store.upsertReleasable(existing, prepared)
-        try Store.save(merged, storePath)
-        finally release()
+        Store.save(Store.upsert(
+          Store.loadOrEmpty(batch.sparkSession, storePath), prepared), storePath)
       }
       .start()
   }
@@ -190,14 +176,9 @@ object FinanceStream {
             .filterNot(_ == "transaction_id").map(col): _*)
         if (sess.catalog.tableExists(table))
           Store.upsertBucketedYears(sess, table, prepared)
-        else {
-          val empty = sess.createDataFrame(
-            sess.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            TransactionSchema.storeSchema)
-          val (merged, release) = Store.upsertReleasable(empty, prepared)
-          try Store.saveBucketed(merged, table, nBuckets)
-          finally release()
-        }
+        else
+          Store.saveBucketed(Store.upsert(Store.empty(sess), prepared),
+            table, nBuckets)
       }
       .start()
   }

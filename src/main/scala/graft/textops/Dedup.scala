@@ -26,10 +26,9 @@ import graft.functions.{AggExprs, ArrayExprs}
   * [[minhashLshPairs]] persist an intermediate (the shingle arrays /
   * signatures) that the RETURNED lazy plan still reads, so it cannot be
   * unpersisted inside the call — one MEMORY_AND_DISK entry per call.
-  * Each has a `...Releasable` twin returning `(frame, release)` — the
-  * [[graft.finance.Store.upsertReleasable]] pattern: pipeline callers
-  * that materialize the result (write it, collect it) call the handle
-  * afterwards. The plain variants register their handle with
+  * Each has a `...Releasable` twin returning `(frame, release)`:
+  * pipeline callers that materialize the result (write it, collect it)
+  * call the handle afterwards. The plain variants register their handle with
   * [[graft.CacheHandles]] (r15), so harness consumers (Verify between
   * queries, Bench between reps) drain them automatically — a plain
   * call is no longer a per-invocation leak, it is a deferred release.

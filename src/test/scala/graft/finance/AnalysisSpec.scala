@@ -83,6 +83,18 @@ class AnalysisSpec extends SparkSpec {
     assert(out === Seq(("A", -30.0), ("B", -40.0), ("C", -35.0)))
   }
 
+  test("uncategorized cumsum: exact cents, not a running double sum") {
+    // 0.1 + 0.2 is 0.30000000000000004 in doubles; the curve must read 0.3
+    val amounts = Seq(0.1, 0.2, 0.7, 1.1, 2.2, 3.3)
+    val rows = amounts.zipWithIndex.map { case (m, i) =>
+      ("giro", "2024-04-04", s"P$i", null: String, null: String, m, null: String)
+    }
+    val out = Analysis.uncategorizedCumsum(pc(rows: _*), 2024)
+      .select("cumulative_sum").as[Double].collect().toSeq
+    val exact = amounts.map(a => math.round(a * 100)).scanLeft(0L)(_ + _).tail
+    assert(out === exact.map(_ / 100.0))
+  }
+
   test("giro credits: positive amounts on giro for the year only") {
     val out = Analysis.giroCredits(base, 2024)
       .select("party").as[String].collect().toSeq.sorted

@@ -59,4 +59,19 @@ class IngCsvSpec extends SparkSpec {
     assert(ex.getMessage.contains("unknown IBAN") ||
       ex.getCause != null && ex.getCause.getMessage.contains("unknown IBAN"))
   }
+
+  test("malformed amount raises with its statement file and line") {
+    val dir = Files.createTempDirectory("ingcsv3")
+    val bad = "05.06.2024;06.06.2024;Kreuzwerker;Gehalt/Rente;Gehalt Juni;5.678,90;EUR;4.4x4,34;EUR"
+    val path = writeFixture(dir, "Umsatzanzeige_DE69500105175402313946_bad.csv",
+      fixtureBody.replace(
+        "05.06.2024;06.06.2024;Kreuzwerker;Gehalt/Rente;Gehalt Juni;5.678,90;EUR;4.444,34;EUR",
+        bad))
+    val ex = intercept[Exception](IngCsv.read(spark, path).collect())
+    val msgs = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).toSeq
+    assert(msgs.exists(m => m.contains("malformed amount '4.4x4,34'") &&
+      m.contains("Umsatzanzeige_DE69500105175402313946_bad.csv") &&
+      m.contains(bad)), msgs.mkString("\n"))
+  }
 }
