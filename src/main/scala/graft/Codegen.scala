@@ -1,7 +1,8 @@
 package graft
 
 /** Generated-class cache sizing shared by every session the program
-  * builds (`graft.finance.Cli.session()`, [[Bench]], [[ScaleSmoke]]).
+  * builds (`graft.finance.Cli.session()`, [[Bench]], [[ScaleSmoke]]) and
+  * by the specs' shared session.
   */
 object Codegen {
 

@@ -9,9 +9,10 @@ package graft
   *        final plan is the one printed, not the initial estimate).
   *
   *        runMain graft.Explain report <store.parquet> <year>
-  *        renders the finance HTML report of a store and prints every
-  *        query the render ran, as executed (AQE-final), with counts of
-  *        their store reads, sorts and range-partitioning exchanges.
+  *        renders the finance HTML report of a store in `Cli`'s session
+  *        and prints every query the render ran, as executed (AQE-final),
+  *        with counts of their store reads, sorts and range-partitioning
+  *        exchanges.
   */
 object Explain {
   def main(args: Array[String]): Unit = args.toList match {
@@ -39,7 +40,8 @@ object Explain {
     import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val spark = session()
+    // the session `Cli` renders with, so the plans are the ones it runs
+    val spark = finance.Cli.session()
     val ran = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =

@@ -5,10 +5,14 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // optional 3rd+ args: run only the named queries (local dev loop);
-    // the driver always invokes with exactly (sfDir, outDir) → full run
+    // optional 3rd+ args: run only the named gates and write only their
+    // oracles, so the compare scores exactly the gates that ran; with
+    // exactly (sfDir, outDir) every gate runs
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
+    val unknown = only.diff(SparkEntry.queries.keySet)
+    require(unknown.isEmpty, s"unknown gate(s): ${unknown.mkString(", ")}")
+    def selected(name: String): Boolean = only.isEmpty || only(name)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -23,7 +27,7 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
+      .filter { case (name, _) => selected(name) }
       .foreach { case (name, fn) =>
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
@@ -48,6 +52,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
+      .filter { case (name, _) => selected(name) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -28,11 +28,9 @@ import org.apache.spark.sql.functions._
   * of at most some 1e5 rows, and a batch is that user's statements. So the
   * ids come from one ordered window over the batch (one task), nothing is
   * cached, and [[save]] commits crash-safely by renames. The merge is
-  * one shuffle join keyed on fingerprint. The bucketed layout
-  * ([[saveBucketed]]: `bucketBy(n, "fingerprint")` + `partitionBy(
-  * book_year)`) co-locates that join — the store side reads its buckets
-  * with NO Exchange — and lets year-scoped jobs prune to the years they
-  * touch. StoreSpec asserts both properties on the physical plan.
+  * one shuffle join keyed on fingerprint. The store has one layout: a
+  * plain parquet directory that only [[save]] writes; [[load]] and
+  * [[loadOrEmpty]] read it after recovering a crashed commit.
   */
 object Store {
 
@@ -76,18 +74,14 @@ object Store {
     * [[TransactionSchema.storeSchema]] columns minus ids on the batch side).
     *
     * `existing` may be empty (first import). Returns the new store content.
-    * `idBase` overrides MAX(id) for callers merging against a SLICE of the
-    * store ([[upsertBucketedYears]]): ids must continue from the GLOBAL
-    * max, not the slice's.
     */
-  def upsert(existing: DataFrame, batch: DataFrame,
-      idBase: Option[Long] = None): DataFrame = {
+  def upsert(existing: DataFrame, batch: DataFrame): DataFrame = {
     val spark = existing.sparkSession
     import spark.implicits._
 
     // MAX(id)+1 offset — single tiny driver-side aggregate (panda.py:685-688).
-    val maxId: Long = idBase.getOrElse(
-      existing.agg(coalesce(max("transaction_id"), lit(0L))).as[Long].head())
+    val maxId: Long =
+      existing.agg(coalesce(max("transaction_id"), lit(0L))).as[Long].head()
 
     // Candidate ids enumerate the WHOLE batch in canonical order; ids of
     // conflicting rows are burned (panda.py:691). Ties in canonicalOrder
@@ -190,144 +184,6 @@ object Store {
   def empty(spark: SparkSession): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
       TransactionSchema.storeSchema)
-
-  /** The fleet-scale store layout, realized: fingerprint-bucketed,
-    * `book_year`-partitioned parquet table. Properties this buys (both
-    * asserted by StoreSpec on the physical plan):
-    *
-    *   - the [[upsert]] merge join reads the store side straight from its
-    *     buckets — hashpartitioning(fingerprint, n) is satisfied by the
-    *     layout, so EnsureRequirements inserts NO Exchange over the store
-    *     scan; only the (small) incoming batch shuffles. At 100 TB the
-    *     store never re-shuffles for its own merge.
-    *   - year-scoped jobs (re-categorization, reports) prune to the
-    *     `book_year=` directories they touch instead of scanning history.
-    *
-    * `sortBy(fingerprint)` keeps bucket files merge-ready. NULL book_date
-    * lands in the `__HIVE_DEFAULT_PARTITION__` directory — still scanned
-    * by unfiltered reads. saveAsTable registers in the session catalog; a
-    * deployment would declare the same layout as an EXTERNAL table at the
-    * store path.
-    *
-    * Two-phase like [[save]]: the frame is staged to `<table>_staging` and
-    * swapped in via DROP + RENAME — a direct `mode("overwrite")` into the
-    * table the frame was read from throws (Spark refuses to overwrite a
-    * relation it is scanning), which would break the system-of-record cycle
-    * `loadBucketed → upsert → saveBucketed`. Unlike [[save]], the swap is
-    * not crash-safe: a crash between DROP and RENAME leaves only the
-    * staging table. Year-SCOPED
-    * rewrites should use [[replaceYearPartitions]] instead — a full-store
-    * swap for a one-year re-categorization rewrites 100 TB to change one
-    * partition.
-    */
-  def saveBucketed(df: DataFrame, table: String, nBuckets: Int = 16): Unit = {
-    val spark = df.sparkSession
-    val staging = table + "_staging"
-    spark.sql(s"DROP TABLE IF EXISTS $staging")
-    df.withColumn("book_year", year(col("book_date")))
-      .write.mode("overwrite")
-      .partitionBy("book_year")
-      .bucketBy(nBuckets, "fingerprint")
-      .sortBy("fingerprint")
-      .format("parquet")
-      .saveAsTable(staging)
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    spark.sql(s"ALTER TABLE $staging RENAME TO $table")
-    // RENAME moves the managed table DIRECTORY but partition entries keep
-    // their absolute staging locations — re-register them from the moved
-    // tree or every partitioned scan resolves to the old (gone) paths
-    spark.sql(s"ALTER TABLE $table RECOVER PARTITIONS")
-  }
-
-  /** Partition-level replace: overwrite ONLY the `book_year=` partitions
-    * present in `updated`, leaving every other partition's data files
-    * untouched (byte-identical — StoreSpec asserts checksums). This is the
-    * fleet-scale shape of the reference's idempotent re-categorization
-    * (panda.py:770-775): a year-scoped categorize touches that year's
-    * directories, never the rest of history.
-    *
-    * Mechanics: dynamic partition overwrite (`partitionOverwriteMode=
-    * dynamic`) through `insertInto`, which inherits the table's bucket
-    * spec, so replaced partitions stay fingerprint-bucketed and the
-    * upsert-merge stays Exchange-free afterwards. The replacement slice is
-    * staged to a temp table first: Spark (correctly) refuses to overwrite
-    * files that the insert's own plan is reading, and the slice is small —
-    * proportional to the touched years, not the store.
-    */
-  def replaceYearPartitions(updated: DataFrame, table: String): Unit = {
-    val spark = updated.sparkSession
-    val staging = table + "_slice_staging"
-    val cols = spark.table(table).columns // catalog order, book_year last
-    spark.sql(s"DROP TABLE IF EXISTS $staging")
-    updated.withColumn("book_year", year(col("book_date")))
-      .select(cols.map(col).toSeq: _*)
-      .write.mode("overwrite").format("parquet").saveAsTable(staging)
-    // session conf, not a writer option: insertInto into a catalog table
-    // ignores writer options — with the conf unset a STATIC overwrite
-    // would silently delete every untouched partition
-    val modeKey = "spark.sql.sources.partitionOverwriteMode"
-    val prevMode = spark.conf.getOption(modeKey)
-    spark.conf.set(modeKey, "dynamic")
-    try {
-      spark.table(staging).write.mode("overwrite").insertInto(table)
-    } finally {
-      prevMode.fold(spark.conf.unset(modeKey))(spark.conf.set(modeKey, _))
-      spark.sql(s"DROP TABLE IF EXISTS $staging")
-    }
-  }
-
-  /** Read the bucketed store. Keeps the `book_year` partition column so
-    * callers' year filters prune; [[upsert]] callers drop it.
-    */
-  def loadBucketed(spark: SparkSession, table: String): DataFrame =
-    spark.table(table)
-
-  /** Incremental upsert into a bucketed store table, scoped to the
-    * `book_year` partitions the batch touches — per-call cost is
-    * O(touched years + batch), never O(store). This is the continuous-
-    * ingest write shape ([[graft.streaming.FinanceStream.runSpineBucketed]]
-    * calls it per micro-batch); a full [[save]]/[[saveBucketed]] rewrite
-    * per batch would be O(100 TB) per trigger at fleet scale.
-    *
-    * Why the year scoping is CORRECT, not approximate: `book_date` is a
-    * fingerprint field ([[fingerprint]]), so a batch row can only match a
-    * store row with the identical book_date — i.e. inside its own
-    * `book_year` partition — and the upsert's update columns
-    * (categories + balance) never move a row across years. Untouched
-    * years therefore cannot contain matches and their data files stay
-    * byte-identical ([[replaceYearPartitions]] never opens them;
-    * FinanceStreamSpec asserts checksums).
-    *
-    * Plan shape: the store slice is read through the table's partition
-    * pruning (only touched `book_year=` directories are scanned) and its
-    * fingerprint bucketing keeps the merge join Exchange-free on the
-    * store side — only the batch shuffles. New ids continue from the
-    * GLOBAL max id: one column-pruned aggregate over the store (parquet
-    * footer stats), the single whole-store touch this path keeps.
-    */
-  def upsertBucketedYears(spark: SparkSession, table: String,
-      batch: DataFrame): Unit = {
-    import spark.implicits._
-    val store = loadBucketed(spark, table)
-    val maxId: Long = store.agg(coalesce(max("transaction_id"), lit(0L)))
-      .as[Long].head()
-    // the touched-year set is small by construction (statements span few
-    // years) — collect is driver-safe; NULL book_date rows live in the
-    // null partition, included via an explicit isNull branch
-    val years = batch.select(year(col("book_date")).as("y")).distinct()
-      .collect().map(r => if (r.isNullAt(0)) None else Some(r.getInt(0)))
-    if (years.nonEmpty) {
-      val inYears = years.flatten.toSeq match {
-        case Seq() => None
-        case ys    => Some(col("book_year").isin(ys: _*))
-      }
-      val nullYear =
-        if (years.contains(None)) Some(col("book_year").isNull) else None
-      val pred = (inYears ++ nullYear).reduce(_ || _)
-      val slice = store.filter(pred).drop("book_year")
-      replaceYearPartitions(upsert(slice, batch, idBase = Some(maxId)), table)
-    }
-  }
 
   /** Commit `df` as the store at `path`, crash-safely. The new version is
     * written to `<path>.staging`; the committed store is renamed aside to

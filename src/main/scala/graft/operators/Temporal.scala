@@ -158,9 +158,10 @@ object Temporal {
 
   /** Save a snapshot as a KEY-BUCKETED table — the base-table layout
     * [[applyChangelogBucketed]] merges into without ever shuffling the
-    * base side. Same two-phase staging swap as the finance store's
-    * bucketed layout (finance/Store.saveBucketed), minus the year
-    * partitioning: a CDC base table's access path is the key, not time.
+    * base side. The snapshot is written to `<table>_staging` and swapped
+    * in by DROP + RENAME, so a crash between the two leaves only the
+    * staging table. Not partitioned: a CDC base table's access path is
+    * the key, not time.
     */
   def saveBucketedBase(df: DataFrame, table: String, key: String,
       nBuckets: Int = 32): Unit = {

@@ -8,12 +8,11 @@ import org.apache.spark.sql.types.StructType
 
 /** Minimal ACID table layer over immutable parquet data files — the
   * manifest/snapshot commit protocol (Iceberg/Delta-class semantics,
-  * reduced to the core) that the plain two-phase-swap store
-  * ([[graft.finance.Store.save]]/[[graft.finance.Store.saveBucketed]])
-  * lacks: concurrent writers serialize through an atomic version
-  * publish, and a reader pinned to a snapshot can never observe a torn
-  * or half-replaced table, even while writers commit and old versions
-  * are vacuumed around it.
+  * reduced to the core) that the finance store's rename commit
+  * ([[graft.finance.Store.save]]) lacks: concurrent writers serialize
+  * through an atomic version publish, and a reader pinned to a snapshot
+  * can never observe a torn or half-replaced table, even while writers
+  * commit and old versions are vacuumed around it.
   *
   * Layout under a table root:
   * {{{

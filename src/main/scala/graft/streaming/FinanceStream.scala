@@ -26,8 +26,8 @@ import graft.finance.{IngCsv, Store, TransactionSchema}
   * Scale posture: file listing is the only driver work; parse/categorize
   * are stateless projections; dedup state is watermark-bounded (keyed on
   * fingerprint, evicted past the horizon); the upsert inside foreachBatch
-  * is the same fingerprint-keyed merge join the batch path uses — against
-  * a bucketed store it stays Exchange-free on the store side.
+  * is the same fingerprint-keyed merge join and crash-safe [[Store.save]]
+  * commit the batch import uses.
   */
 object FinanceStream {
 
@@ -111,11 +111,10 @@ object FinanceStream {
     * multiple micro-batches — the spec uses it to prove incremental
     * upserts compose.
     *
-    * Each micro-batch re-reads and REWRITES the whole path-based store —
-    * O(store) per trigger, acceptable only for this one-shot import shape.
-    * A continuous deployment (drop the trigger, let it run) must use
-    * [[runSpineBucketed]], whose per-trigger cost is O(touched years +
-    * batch).
+    * Each micro-batch re-reads and rewrites the whole store, O(store) per
+    * trigger: a store is one user's ledger (see [[Store]]'s scale
+    * posture). A restarted drain on the same checkpoint ingests only new
+    * files and continues ids from the committed store.
     */
   def runSpine(spark: SparkSession, dir: String, storePath: String,
       checkpoint: String, watermarkDelay: String = "30 days",
@@ -133,52 +132,6 @@ object FinanceStream {
             .filterNot(_ == "transaction_id").map(col): _*)
         Store.save(Store.upsert(
           Store.loadOrEmpty(batch.sparkSession, storePath), prepared), storePath)
-      }
-      .start()
-  }
-
-  /** The CONTINUOUS deployment shape: the same spine, upserting each
-    * micro-batch INCREMENTALLY into the fingerprint-bucketed store table —
-    * per-trigger cost is O(touched `book_year` partitions + batch), never
-    * O(store), which is what lets the query run unattended against a
-    * 100 TB system-of-record:
-    *
-    *   - the merge reads the store through [[Store.upsertBucketedYears]]:
-    *     partition-pruned to the batch's years (a fingerprint pins its
-    *     book_date, so matches cannot exist elsewhere) and Exchange-free
-    *     on the store side thanks to the fingerprint bucketing;
-    *   - the write-back is [[Store.replaceYearPartitions]] — dynamic
-    *     partition overwrite of exactly the touched `book_year=`
-    *     directories; every other partition's data files stay
-    *     byte-identical across triggers (FinanceStreamSpec asserts
-    *     checksums).
-    *
-    * The first micro-batch bootstraps the table via [[Store.saveBucketed]].
-    * Kept on `Trigger.AvailableNow` so tests and one-shot runs drain and
-    * stop; a deployment drops the trigger and the per-trigger cost model
-    * above is the one that holds.
-    */
-  def runSpineBucketed(spark: SparkSession, dir: String, table: String,
-      checkpoint: String, watermarkDelay: String = "30 days",
-      maxFilesPerTrigger: Option[Int] = None,
-      nBuckets: Int = 16): StreamingQuery = {
-    val deduped = spine(
-      IngCsv.project(ingLines(spark, dir, maxFilesPerTrigger)),
-      watermarkDelay)
-    deduped.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val sess = batch.sparkSession
-        val prepared = batch
-          .withColumn("imported_at", current_timestamp())
-          .select(TransactionSchema.storeSchema.fieldNames.toSeq
-            .filterNot(_ == "transaction_id").map(col): _*)
-        if (sess.catalog.tableExists(table))
-          Store.upsertBucketedYears(sess, table, prepared)
-        else
-          Store.saveBucketed(Store.upsert(Store.empty(sess), prepared),
-            table, nBuckets)
       }
       .start()
   }

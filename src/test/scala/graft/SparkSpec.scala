@@ -20,6 +20,9 @@ object SparkSpec {
         "graft.functions.GraftSparkExtensions")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the generated-class cache size users get (see graft.Codegen)
+      .config("spark.sql.codegen.cache.maxEntries",
+        graft.Codegen.cacheMaxEntries)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -132,162 +132,6 @@ class StoreSpec extends SparkSpec {
     assert(out(1).getAs[String]("party") === "z")
   }
 
-  test("bucketed store: shuffle-free store side in upsert, pruned year scan") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prior = spark.conf.get(aqeKey)
-    spark.conf.set(aqeKey, "false") // deterministic physical plan to assert
-    try {
-      val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        TransactionSchema.storeSchema)
-      val batch1 = Store.withStoreColumns(rawDf(Seq(
-        rawRow("giro", "2023-03-01", "2023-03-01", "a", null, "p1", -1.0, 0.0),
-        rawRow("giro", "2024-01-02", "2024-01-02", "b", null, "p2", -2.0, 0.0),
-        rawRow("common", "2024-05-01", "2024-05-01", "c", null, "p3", -3.0, 0.0))))
-        .withColumn("imported_at", current_timestamp())
-      spark.sql("DROP TABLE IF EXISTS store_bucketed_spec")
-      Store.saveBucketed(Store.upsert(empty, batch1),
-        "store_bucketed_spec", nBuckets = 4)
-
-      // (a) year filters prune partitions: only book_year=2024 is scanned
-      val bucketed = Store.loadBucketed(spark, "store_bucketed_spec")
-      val pruned = bucketed.filter(col("book_year") === 2024)
-      val scan = pruned.queryExecution.executedPlan.collect {
-        case f: FileSourceScanExec => f }.head
-      assert(scan.partitionFilters.nonEmpty, "year filter must prune")
-      assert(scan.relation.location.listFiles(scan.partitionFilters, Nil)
-        .map(_.values.getInt(0)).toSet === Set(2024))
-
-      // (b) upsert over the bucketed store: the merge SMJ reads the store
-      // side straight from its buckets — no Exchange in that subtree; only
-      // the batch side shuffles
-      val batch2 = Store.withStoreColumns(rawDf(Seq(
-        rawRow("giro", "2024-01-02", "2024-01-02", "b", null, "p2", -2.0, 9.0),
-        rawRow("giro", "2024-06-06", "2024-06-06", "d", null, "p4", -4.0, 0.0))))
-        .withColumn("imported_at", current_timestamp())
-      val next = Store.upsert(bucketed.drop("book_year"), batch2)
-      val smjs = next.queryExecution.executedPlan.collect {
-        case j: SortMergeJoinExec => j }
-      assert(smjs.nonEmpty, "expected the merge to be a sort-merge join")
-      val storeSide = smjs.head.left // ex (store) side of the full-outer join
-      assert(storeSide.collect { case f: FileSourceScanExec => f }
-        .exists(_.bucketedScan), "store side must be a bucketed scan")
-      assert(storeSide.collect { case e: ShuffleExchangeLike => e }.isEmpty,
-        "bucketed store side must not re-shuffle for its own merge")
-      // and the merge result is still correct
-      val out = next.orderBy("book_date")
-        .select("party", "balance_cents").as[(String, Long)].collect()
-      assert(out === Array(("a", 0L), ("b", 900L), ("c", 0L), ("d", 0L)))
-    } finally {
-      spark.conf.set(aqeKey, prior)
-      spark.sql("DROP TABLE IF EXISTS store_bucketed_spec")
-    }
-  }
-
-  test("bucketed store survives the read-modify-write cycle (staged swap)") {
-    // loadBucketed → upsert → saveBucketed into the SAME table: the direct
-    // overwrite threw AnalysisException (writing a relation being read);
-    // the staged swap must make the full system-of-record cycle work.
-    val table = "store_rmw_spec"
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    try {
-      val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        TransactionSchema.storeSchema)
-      val batch1 = Store.withStoreColumns(rawDf(Seq(
-        rawRow("giro", "2024-01-01", "2024-01-01", "rmw-a", null, "p1", -1.0, 0.0))))
-        .withColumn("imported_at", current_timestamp())
-      Store.saveBucketed(Store.upsert(empty, batch1), table, nBuckets = 4)
-      val batch2 = Store.withStoreColumns(rawDf(Seq(
-        rawRow("giro", "2024-02-02", "2024-02-02", "rmw-b", null, "p2", -2.0, 0.0))))
-        .withColumn("imported_at", current_timestamp())
-      Store.saveBucketed(
-        Store.upsert(Store.loadBucketed(spark, table).drop("book_year"),
-          batch2), table, nBuckets = 4)
-      val back = Store.loadBucketed(spark, table)
-      assert(back.select("party").as[String].collect().sorted
-        === Array("rmw-a", "rmw-b"))
-      // the swapped-in table keeps the bucket layout (catalog bucket spec
-      // survives RENAME): scans can still satisfy the merge without an
-      // Exchange on the store side
-      import org.apache.spark.sql.execution.FileSourceScanExec
-      val aqeKey = "spark.sql.adaptive.enabled"
-      val prior = spark.conf.get(aqeKey)
-      spark.conf.set(aqeKey, "false")
-      try {
-        val scan = Store.upsert(back.drop("book_year"), batch1)
-          .queryExecution.executedPlan.collect {
-            case f: FileSourceScanExec => f }
-        assert(scan.exists(_.bucketedScan),
-          "renamed table must still produce a bucketed scan")
-      } finally spark.conf.set(aqeKey, prior)
-    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
-  }
-
-  test("replaceYearPartitions rewrites only touched partitions byte-for-byte") {
-    val table = "store_partrepl_spec"
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    try {
-      val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        TransactionSchema.storeSchema)
-      val batch = Store.withStoreColumns(rawDf(Seq(
-        rawRow("giro", "2023-03-01", "2023-03-01", "pr-a", null, "p1", -1.0, 0.0),
-        rawRow("giro", "2023-07-01", "2023-07-01", "pr-b", null, "p2", -2.0, 0.0),
-        rawRow("giro", "2024-01-02", "2024-01-02", "pr-c", null, "p3", -3.0, 0.0))))
-        .withColumn("imported_at", to_timestamp(lit("2024-01-01 00:00:00")))
-      Store.saveBucketed(Store.upsert(empty, batch), table, nBuckets = 4)
-
-      val loc = java.nio.file.Paths.get(new java.net.URI(
-        spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(table))
-          .location.toString))
-      def partFiles(year: Int): Map[String, String] = {
-        val dir = loc.resolve(s"book_year=$year")
-        val files = Files.list(dir).toArray.map(_.toString).filter(
-          _.endsWith(".parquet"))
-        files.map { f =>
-          val bytes = Files.readAllBytes(java.nio.file.Paths.get(f))
-          f -> MessageDigest.getInstance("SHA-256").digest(bytes)
-            .map("%02x".format(_)).mkString
-        }.toMap
-      }
-      val before2023 = partFiles(2023)
-      assert(before2023.nonEmpty)
-
-      // year-scoped re-categorization: touch ONLY 2024
-      val updated = Store.loadBucketed(spark, table)
-        .filter(col("book_year") === 2024).drop("book_year")
-        .withColumn("category", lit("recat::done"))
-      Store.replaceYearPartitions(updated, table)
-
-      // 2023 partition data files: same paths, same bytes
-      assert(partFiles(2023) === before2023,
-        "untouched partition files must be byte-identical")
-      // 2024 content replaced, everything else intact
-      val back = Store.loadBucketed(spark, table)
-      val cats = back.orderBy("book_date")
-        .select("party", "category").as[(String, String)].collect()
-      assert(cats === Array(("pr-a", null), ("pr-b", null),
-        ("pr-c", "recat::done")))
-      // replaced partition keeps the bucket layout for the merge join
-      import org.apache.spark.sql.execution.FileSourceScanExec
-      val aqeKey = "spark.sql.adaptive.enabled"
-      val prior = spark.conf.get(aqeKey)
-      spark.conf.set(aqeKey, "false")
-      try {
-        val scans = Store.upsert(back.drop("book_year"),
-          batch).queryExecution.executedPlan.collect {
-            case f: FileSourceScanExec => f }
-        assert(scans.exists(_.bucketedScan),
-          "store must stay a bucketed scan after partition replace")
-      } finally spark.conf.set(aqeKey, prior)
-    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
-  }
-
   test("upsert + save leave no persisted RDD behind") {
     val dir = Files.createTempDirectory("store-rel").resolve("tx.parquet")
     val batch = Store.withStoreColumns(rawDf(Seq(

@@ -17,7 +17,7 @@ import graft.operators.FinanceQueries
   */
 class FinanceStreamSpec extends SparkSpec {
 
-  test("incremental bucketed spine output equals the q38 batch pipeline") {
+  test("incremental spine output equals the q38 batch pipeline") {
     val tmp = Files.createTempDirectory("fin-stream")
     val inDir = tmp.resolve("in")
     Files.createDirectories(inDir)
@@ -25,46 +25,42 @@ class FinanceStreamSpec extends SparkSpec {
       Files.copy(Paths.get(s"${FinanceQueries.fixtureDir}/$f"),
         inDir.resolve(f))
     }
-    val table = "fin_stream_spine_spec"
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    try {
-      val q = FinanceStream.runSpineBucketed(spark, inDir.toString, table,
-        tmp.resolve("ckpt").toString, maxFilesPerTrigger = Some(2))
-      q.awaitTermination()
+    val store = tmp.resolve("store.parquet").toString
+    val q = FinanceStream.runSpine(spark, inDir.toString, store,
+      tmp.resolve("ckpt").toString, maxFilesPerTrigger = Some(2))
+    q.awaitTermination()
 
-      // incremental for real: the 4 files drained in ≥2 non-empty batches
-      assert(q.recentProgress.count(_.numInputRows > 0) >= 2,
-        s"expected ≥2 micro-batches, got " +
-          q.recentProgress.map(_.numInputRows).mkString(","))
+    // incremental for real: the 4 files drained in ≥2 non-empty batches
+    assert(q.recentProgress.count(_.numInputRows > 0) >= 2,
+      s"expected ≥2 micro-batches, got " +
+        q.recentProgress.map(_.numInputRows).mkString(","))
 
-      val cols = Seq("account", "book_date", "valuta_date", "party",
-        "book_text", "purpose", "amount_cents", "balance_cents",
-        "transfer_category", "category", "fingerprint")
-      val streamed = Store.loadBucketed(spark, table)
-        .select(cols.map(col): _*).collect().map(_.toSeq)
-        .sortBy(_.toString)
-      val batch = FinanceQueries.q38IngPipeline(spark, "unused")
-        .select(cols.map(col): _*).collect().map(_.toSeq)
-        .sortBy(_.toString)
-      assert(batch.nonEmpty)
-      assert(streamed === batch,
-        "streamed store must equal the batch pipeline row-for-row")
+    val cols = Seq("account", "book_date", "valuta_date", "party",
+      "book_text", "purpose", "amount_cents", "balance_cents",
+      "transfer_category", "category", "fingerprint")
+    val streamed = spark.read.parquet(store)
+      .select(cols.map(col): _*).collect().map(_.toSeq)
+      .sortBy(_.toString)
+    val batch = FinanceQueries.q38IngPipeline(spark, "unused")
+      .select(cols.map(col): _*).collect().map(_.toSeq)
+      .sortBy(_.toString)
+    assert(batch.nonEmpty)
+    assert(streamed === batch,
+      "streamed store must equal the batch pipeline row-for-row")
 
-      // upsert composed correctly across batches: ids are 1..n and unique
-      val ids = Store.loadBucketed(spark, table)
-        .select("transaction_id")
-        .as[Long](org.apache.spark.sql.Encoders.scalaLong)
-        .collect().sorted
-      assert(ids.head >= 1L && ids.distinct.length === ids.length)
-    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+    // upsert composed correctly across batches: ids are ≥ 1 and unique
+    val ids = spark.read.parquet(store)
+      .select("transaction_id")
+      .as[Long](org.apache.spark.sql.Encoders.scalaLong)
+      .collect().sorted
+    assert(ids.head >= 1L && ids.distinct.length === ids.length)
   }
 
-  test("bucketed spine leaves untouched-year partitions byte-identical") {
-    // Two drains with a shared checkpoint (a stop/start of the continuous
-    // deployment): the second ingests only a 2024 statement, so the 2020
-    // partition written by the first must not be rewritten — same files,
-    // same bytes. This is the O(touched years) claim made falsifiable.
-    val tmp = Files.createTempDirectory("fin-stream-incr")
+  test("a restarted spine drain continues ids from the committed store") {
+    // Two drains on one checkpoint (a stop/start of the stream): the
+    // second sees only the new 2024 statement and must merge it into the
+    // store the first committed, continuing its ids.
+    val tmp = Files.createTempDirectory("fin-stream-restart")
     val inDir = tmp.resolve("in")
     Files.createDirectories(inDir)
     val header = "Buchung;Wertstellungsdatum;Auftraggeber/Empfaenger;" +
@@ -73,50 +69,25 @@ class FinanceStreamSpec extends SparkSpec {
       Files.write(inDir.resolve(name),
         (s"Umsatzanzeige preamble;x\n$header\n" + rows.mkString("\n") + "\n")
           .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
-    val table = "fin_stream_incr_spec"
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    try {
-      write("a_DE69500105175402313946_1.csv", Seq(
-        "02.01.2020;02.01.2020;OLDCO;Lastschrift;rent20;1,00;EUR;-1,00;EUR",
-        "03.01.2020;03.01.2020;OLDCO;Lastschrift;gas20;2,00;EUR;-2,00;EUR"))
-      FinanceStream.runSpineBucketed(spark, inDir.toString, table,
-        tmp.resolve("ckpt").toString).awaitTermination()
+    val store = tmp.resolve("store.parquet").toString
+    def drain(): Unit = FinanceStream.runSpine(spark, inDir.toString, store,
+      tmp.resolve("ckpt").toString).awaitTermination()
 
-      val loc = java.nio.file.Paths.get(new java.net.URI(
-        spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(table))
-          .location.toString))
-      def partFiles(year: Int): Map[String, String] = {
-        val dir = loc.resolve(s"book_year=$year")
-        Files.list(dir).toArray.map(_.toString)
-          .filter(_.endsWith(".parquet")).map { f =>
-            val bytes = Files.readAllBytes(java.nio.file.Paths.get(f))
-            f -> java.security.MessageDigest.getInstance("SHA-256")
-              .digest(bytes).map("%02x".format(_)).mkString
-          }.toMap
-      }
-      val before2020 = partFiles(2020)
-      assert(before2020.nonEmpty)
+    write("a_DE69500105175402313946_1.csv", Seq(
+      "02.01.2020;02.01.2020;OLDCO;Lastschrift;rent20;1,00;EUR;-1,00;EUR",
+      "03.01.2020;03.01.2020;OLDCO;Lastschrift;gas20;2,00;EUR;-2,00;EUR"))
+    drain()
+    write("a_DE69500105175402313946_2.csv", Seq(
+      "01.06.2024;01.06.2024;ACME;Lastschrift;rent24;3,00;EUR;-3,00;EUR"))
+    drain()
 
-      // second drain: one NEW 2024 statement; same checkpoint, so only the
-      // new file enters the micro-batch
-      write("a_DE69500105175402313946_2.csv", Seq(
-        "01.06.2024;01.06.2024;ACME;Lastschrift;rent24;3,00;EUR;-3,00;EUR"))
-      FinanceStream.runSpineBucketed(spark, inDir.toString, table,
-        tmp.resolve("ckpt").toString).awaitTermination()
-
-      assert(partFiles(2020) === before2020,
-        "untouched 2020 partition files must be byte-identical")
-      val rows = Store.loadBucketed(spark, table)
-        .orderBy("book_date").select("purpose", "transaction_id")
-        .as[(String, Long)](org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.STRING,
-          org.apache.spark.sql.Encoders.scalaLong))
-        .collect()
-      assert(rows.map(_._1).toSeq === Seq("rent20", "gas20", "rent24"))
-      // ids continue from the GLOBAL max across drains
-      assert(rows.map(_._2).sorted.toSeq === Seq(1L, 2L, 3L))
-    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+    val rows = spark.read.parquet(store)
+      .orderBy("book_date").select("purpose", "transaction_id")
+      .as[(String, Long)](org.apache.spark.sql.Encoders.tuple(
+        org.apache.spark.sql.Encoders.STRING,
+        org.apache.spark.sql.Encoders.scalaLong))
+      .collect()
+    assert(rows.toSeq === Seq(("rent20", 1L), ("gas20", 2L), ("rent24", 3L)))
   }
 
   test("a statement older than the dedup horizon still reaches the store") {
