@@ -51,7 +51,7 @@ object Cli {
         "purpose", "amount_cents", "balance_cents", "transfer_category",
         "category", "category_manual", "fingerprint", "imported_at")
     Store.save(Store.upsert(existing, prepared), storePath)
-    println(s"Stored $storePath with ${spark.read.parquet(storePath).count()} rows in total")
+    println(s"Stored $storePath with ${Store.read(spark, storePath).count()} rows in total")
   }
 
   /** Re-categorization (§3.2): load → categorize → upsert (identity columns
@@ -68,7 +68,7 @@ object Cli {
         "purpose", "amount_cents", "balance_cents", "transfer_category",
         "category", "category_manual", "fingerprint", "imported_at")
     Store.save(Store.upsert(existing, prepared), storePath)
-    println(s"Stored $storePath with ${spark.read.parquet(storePath).count()} rows in total")
+    println(s"Stored $storePath with ${Store.read(spark, storePath).count()} rows in total")
   }
 
   /** Analysis report (§3.3): the notebook's headline queries for a year.

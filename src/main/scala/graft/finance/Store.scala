@@ -166,7 +166,7 @@ object Store {
     */
   def load(spark: SparkSession, path: String): DataFrame = {
     recover(spark, path)
-    spark.read.parquet(path)
+    read(spark, path)
       .orderBy(canonicalOrder: _*)
       .withColumn("amount", col("amount_cents") / 100.0)
       .withColumn("balance", col("balance_cents") / 100.0)
@@ -179,7 +179,13 @@ object Store {
     * or an empty store when none has been committed yet.
     */
   def loadOrEmpty(spark: SparkSession, path: String): DataFrame =
-    if (recover(spark, path)) spark.read.parquet(path) else empty(spark)
+    if (recover(spark, path)) read(spark, path) else empty(spark)
+
+  /** The committed store at `path`, read with its known schema: inferring
+    * it would run a one-task footer-reading job on every read.
+    */
+  private[finance] def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(TransactionSchema.storeSchema).parquet(path)
 
   def empty(spark: SparkSession): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row],

@@ -124,7 +124,7 @@ object YamlStore {
       .withColumn("imported_at", current_timestamp())
     Store.save(Store.upsert(Store.loadOrEmpty(spark, storePath), batch),
       storePath)
-    val nStore = spark.read.parquet(storePath).count()
+    val nStore = Store.read(spark, storePath).count()
     if (nStore == nYaml) {
       println(s"✓ Migration successful! ($nStore rows)")
       true

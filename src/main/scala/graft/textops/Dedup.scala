@@ -1,7 +1,8 @@
 package graft.textops
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.storage.StorageLevel
 
 import graft.functions.{AggExprs, ArrayExprs}
@@ -20,7 +21,11 @@ import graft.functions.{AggExprs, ArrayExprs}
   * `maxBucket` cap: a degenerate bucket (a stop-shingle shared by most of
   * the corpus, an adversarial LSH collision) is DROPPED rather than
   * collected into one executor — bounded memory traded for recall on
-  * pathological keys, the standard posture for fleet dedup jobs.
+  * pathological keys, the standard posture for fleet dedup jobs. One
+  * step does hold data on the driver: [[connectedComponents]] collects a
+  * pair set of at most [[driverEdgeLimit]] (2^20) edges and finishes the
+  * components there with a union-find; only a larger pair set runs the
+  * distributed fixpoint.
   *
   * Cache lifecycle: [[ngramJaccardPairs]], [[ngramJaccardPairsPrefix]] and
   * [[minhashLshPairs]] persist an intermediate (the shingle arrays /
@@ -416,31 +421,27 @@ object Dedup {
     * and c's "winner" inconsistently). Keep the rows whose
     * `component == id`, drop the rest.
     *
-    * Algorithm: min-label propagation WITH pointer jumping — each round
-    * every node takes the min over (its own label, its neighbors' labels),
-    * then shortcuts through the label table itself (component′ =
-    * label(label(id)), the classic hooking/shortcutting step): the label
-    * distance halves each round, so the fixpoint arrives in O(log max
-    * component diameter) rounds, not O(diameter) — a pathological chain
-    * component (shingled near-identical doc sequences) of diameter 10⁶
-    * converges in ~20 rounds. `maxIter` (default 25 ⇒ diameters beyond
-    * 2^25 hops) bounds the loop and convergence failure FAILS LOUDLY
-    * (require) instead of returning silently-partial components. At fleet
-    * scale each round is two keyed joins + one partial-aggregating min —
-    * no windows, no driver data beyond the 1-row convergence probe per
-    * round.
+    * Two finishes, chosen by the pair count the call observes. It first
+    * collects at most [[driverEdgeLimit]] + 1 edges. When the whole pair
+    * set fits (a curation pass over 1 000 documents has a few thousand
+    * pairs), a union-find over primitive arrays labels every endpoint on
+    * the driver, and one left join carries those labels onto the node
+    * universe: the driver then holds the edges, at most 2^20 of them
+    * (16 MB of longs plus the collected rows). A larger pair set, or ids
+    * that are not `long`, runs [[connectedComponentsDistributed]], the
+    * pointer-jumping fixpoint that holds no data on the driver; the pair
+    * plan's first edges are then read twice.
     *
     * `nodes` (optional) supplies the FULL node universe so isolated nodes
     * — documents with no near-dup pair — appear as singleton components.
     * Pair endpoints are ALWAYS part of the universe (endpoints missing
-    * from `nodes` are unioned in — required for the pointer-jump lookup
-    * and for minimal labels); without `nodes`, only pair endpoints are
-    * labeled.
+    * from `nodes` are unioned in with minimal labels); without `nodes`,
+    * only pair endpoints are labeled.
     *
-    * Returns (id, component), one row per node. The per-round label frames
-    * are persisted and released internally; only the RETURNED frame's
-    * persist survives the call — use the Releasable twin's handle after
-    * materializing (object-scaladoc cache-lifecycle contract).
+    * Returns (id, component), one row per node, persisted and
+    * materialized — call the Releasable twin's handle when done with it
+    * (object-scaladoc cache-lifecycle contract). `maxIter` bounds the
+    * distributed fixpoint only.
     */
   def connectedComponents(pairs: DataFrame,
       idA: String = "id_a", idB: String = "id_b",
@@ -461,12 +462,107 @@ object Dedup {
     (df, release)
   }
 
-  /** [[connectedComponentsReleasable]] plus the number of propagation
-    * rounds the fixpoint took — the scale-evidence number (ScaleSmoke
-    * records it; with pointer jumping it stays ~log₂ of the worst
-    * component diameter).
+  /** [[connectedComponentsReleasable]] plus the number of rounds: the
+    * propagation rounds the distributed fixpoint took (~log₂ of the worst
+    * component diameter with pointer jumping; ScaleSmoke records it), or
+    * 1 for the driver finish, whose one round is the job that collects
+    * the edges.
     */
   def connectedComponentsStats(pairs: DataFrame,
+      idA: String = "id_a", idB: String = "id_b",
+      nodes: Option[DataFrame] = None, nodeCol: String = "doc_id",
+      maxIter: Int = 25): (DataFrame, Int, () => Unit) =
+    componentsWithin(driverEdgeLimit, pairs, idA, idB, nodes, nodeCol,
+      maxIter)
+
+  /** Most pair edges [[connectedComponentsStats]] finishes on the driver. */
+  private[textops] val driverEdgeLimit: Int = 1 << 20
+
+  /** [[connectedComponentsStats]] with the driver finish bounded by
+    * `edgeLimit` edges instead of [[driverEdgeLimit]].
+    */
+  private[textops] def componentsWithin(edgeLimit: Int, pairs: DataFrame,
+      idA: String, idB: String, nodes: Option[DataFrame], nodeCol: String,
+      maxIter: Int): (DataFrame, Int, () => Unit) = {
+    val ids = pairs.select(col(idA), col(idB))
+    val edges =
+      if (ids.schema.forall(_.dataType == LongType))
+        Some(ids.limit(edgeLimit + 1).collect()).filter(_.length <= edgeLimit)
+      else None
+    edges match {
+      case Some(e) => componentsOnDriver(e, pairs.sparkSession, nodes, nodeCol)
+      case None => connectedComponentsDistributed(pairs, idA, idB, nodes,
+        nodeCol, maxIter)
+    }
+  }
+
+  /** The driver finish: union-find labels for the collected `(id_a, id_b)`
+    * edges, left-joined onto `nodes` ∪ endpoints; a node without a label
+    * labels itself.
+    */
+  private def componentsOnDriver(edges: Array[Row], sess: SparkSession,
+      nodes: Option[DataFrame], nodeCol: String): (DataFrame, Int, () => Unit) = {
+    import sess.implicits._
+    val (ends, comps) =
+      unionFindLabels(edges.map(_.getLong(0)), edges.map(_.getLong(1)))
+    val labels = ends.zip(comps).toSeq.toDF("id", "component")
+    val labeled = nodes match {
+      case Some(n) =>
+        n.select(col(nodeCol).as("id")).unionByName(labels.select("id"))
+          .distinct()
+          .join(labels, Seq("id"), "left")
+          .select(col("id"), coalesce(col("component"), col("id"))
+            .as("component"))
+      case None => labels
+    }
+    val out = labeled.persist(StorageLevel.MEMORY_AND_DISK)
+    out.count()
+    (out, 1, () => { out.unpersist(blocking = false); () })
+  }
+
+  /** The min-id component label of every endpoint of the edges
+    * `(a(i), b(i))`: (sorted distinct endpoints, their labels). Union by
+    * the smaller index — the endpoints are sorted, so every root is its
+    * component's minimum id — with path halving.
+    */
+  private[textops] def unionFindLabels(a: Array[Long],
+      b: Array[Long]): (Array[Long], Array[Long]) = {
+    val all = Array.concat(a, b)
+    java.util.Arrays.sort(all)
+    var n = 0
+    for (x <- all) if (n == 0 || all(n - 1) != x) { all(n) = x; n += 1 }
+    val ends = java.util.Arrays.copyOf(all, n)
+    val parent = Array.tabulate(n)(identity)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    for (i <- a.indices) {
+      val ra = find(java.util.Arrays.binarySearch(ends, a(i)))
+      val rb = find(java.util.Arrays.binarySearch(ends, b(i)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    (ends, Array.tabulate(n)(i => ends(find(i))))
+  }
+
+  /** The distributed finish of [[connectedComponentsStats]], for pair sets
+    * too large to collect: min-label propagation WITH pointer jumping —
+    * each round every node takes the min over (its own label, its
+    * neighbors' labels), then shortcuts through the label table itself
+    * (component′ = label(label(id)), the classic hooking/shortcutting
+    * step): the label distance halves each round, so the fixpoint arrives
+    * in O(log max component diameter) rounds, not O(diameter) — a
+    * pathological chain component (shingled near-identical doc sequences)
+    * of diameter 10⁶ converges in ~20 rounds. `maxIter` (default 25 ⇒
+    * diameters beyond 2^25 hops) bounds the loop and convergence failure
+    * FAILS LOUDLY (require) instead of returning silently-partial
+    * components. Each round is two keyed joins + one partial-aggregating
+    * min — no windows, no driver data beyond the 1-row convergence probe
+    * per round. The per-round label frames are persisted and released
+    * internally; only the returned frame's persist survives the call.
+    */
+  private[textops] def connectedComponentsDistributed(pairs: DataFrame,
       idA: String = "id_a", idB: String = "id_b",
       nodes: Option[DataFrame] = None, nodeCol: String = "doc_id",
       maxIter: Int = 25): (DataFrame, Int, () => Unit) = {

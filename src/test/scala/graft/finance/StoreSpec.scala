@@ -4,6 +4,7 @@ import java.nio.file.Files
 import java.security.MessageDigest
 import java.sql.Date
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -294,5 +295,50 @@ class StoreSpec extends SparkSpec {
     val rows = back.collect()
     assert(rows.map(_.getAs[String]("account")).toSeq === Seq("common", "giro"))
     assert(rows.map(_.getAs[Double]("amount")).toSeq === Seq(1.25, -2.5))
+  }
+
+  /** Spark jobs `body` starts on this thread. Jobs are told apart by a
+    * job group; a marker job in the same group, run last, flushes the
+    * asynchronous listener bus, which delivers events in order.
+    */
+  private def jobsStartedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"store-spec-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group) {
+          if (e.properties.getProperty("spark.job.description") == "marker")
+            marker.countDown()
+          else jobs.incrementAndGet()
+        }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "probe")
+    try {
+      body
+      sc.setJobDescription("marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    jobs.get()
+  }
+
+  test("Store.load starts no Spark job: the store schema is known") {
+    val dir = Files.createTempDirectory("store-load").resolve("tx.parquet")
+      .toString
+    val batch = Store.withStoreColumns(rawDf(Seq(
+      rawRow("giro", "2024-02-01", "2024-02-01", "b", null, null, -2.5, 1.0))))
+      .withColumn("imported_at", current_timestamp())
+    Store.save(Store.upsert(Store.empty(spark), batch), dir)
+    var loaded: DataFrame = null
+    assert(jobsStartedBy { loaded = Store.load(spark, dir) } === 0)
+    assert(jobsStartedBy { Store.loadOrEmpty(spark, dir) } === 0)
+    assert(loaded.collect().map(_.getAs[Double]("amount")).toSeq === Seq(-2.5))
   }
 }

@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Connected-components duplicate clustering (the q49 operator): semantics
+  * of both finishes (the driver union-find and the distributed fixpoint)
   * against an in-test union-find oracle, pointer-jumping convergence on a
   * long-chain component, universe handling, and the no-cache-leak contract
-  * on non-convergence.
+  * on release and on non-convergence.
   */
 class DedupGroupsSpec extends SparkSpec {
   import spark.implicits._
@@ -48,7 +49,7 @@ class DedupGroupsSpec extends SparkSpec {
 
   test("pointer jumping: a diameter-79 chain converges in O(log d) rounds") {
     val chain = (0L until 79L).map(i => (i, i + 1))
-    val (labels, rounds, release) = Dedup.connectedComponentsStats(
+    val (labels, rounds, release) = Dedup.connectedComponentsDistributed(
       pairsDf(chain), nodes = Some(nodesDf(0L to 79L)))
     try {
       val out = labelsOf(labels)
@@ -73,9 +74,68 @@ class DedupGroupsSpec extends SparkSpec {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val chain = (0L until 40L).map(i => (i, i + 1))
     val e = intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(pairsDf(chain), maxIter = 1)
+      Dedup.connectedComponentsDistributed(pairsDf(chain), maxIter = 1)
     }
     assert(e.getMessage.contains("did not converge"))
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"leaked persisted RDDs: $leaked")
+  }
+
+  test("seeded random graphs: driver finish, distributed fixpoint and " +
+      "union-find agree") {
+    val rnd = new scala.util.Random(20261021L)
+    // duplicate pairs, reversed pairs and endpoints outside `nodes`; the
+    // last graph has no pairs at all
+    val graphs = Seq(40, 60, 25, 0).map { nPairs =>
+      val pairs = Seq.fill(nPairs)((rnd.nextInt(50).toLong,
+        rnd.nextInt(50).toLong)).filter(p => p._1 != p._2)
+      val withDups = pairs ++ pairs.take(5) ++ pairs.take(5).map(_.swap)
+      (withDups, (0L until 40L).filter(_ => rnd.nextDouble() < 0.8))
+    }
+    for ((pairs, nodes) <- graphs) {
+      val oracle = unionFind(nodes, pairs)
+      val (driver, driverRounds, relDriver) = Dedup.connectedComponentsStats(
+        pairsDf(pairs), nodes = Some(nodesDf(nodes)))
+      val (dist, _, relDist) = Dedup.connectedComponentsDistributed(
+        pairsDf(pairs), nodes = Some(nodesDf(nodes)))
+      try {
+        assert(driverRounds === 1, "small pair sets finish on the driver")
+        assert(labelsOf(driver) === oracle)
+        assert(labelsOf(dist) === oracle)
+        assert(driver.count() === oracle.size, "one row per node")
+        assert(driver.dtypes === dist.dtypes, "same columns and types")
+      } finally { relDriver(); relDist() }
+    }
+    // without `nodes`, only endpoints are labeled
+    val (pairs, _) = graphs.head
+    assert(labelsOf(Dedup.connectedComponents(pairsDf(pairs))) ===
+      unionFind(Nil, pairs))
+  }
+
+  test("more pairs than the driver limit take the distributed fixpoint") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (3L, 4L))
+    val (labels, rounds, release) = Dedup.componentsWithin(3,
+      pairsDf(pairs), "id_a", "id_b", Some(nodesDf(1L to 7L)), "doc_id", 25)
+    try {
+      assert(rounds > 1, s"expected fixpoint rounds, got $rounds")
+      assert(labelsOf(labels) === unionFind(1L to 7L, pairs))
+    } finally release()
+    val (_, atLimit, relAtLimit) = Dedup.componentsWithin(4,
+      pairsDf(pairs), "id_a", "id_b", None, "doc_id", 25)
+    relAtLimit()
+    assert(atLimit === 1, "a pair set of exactly the limit fits")
+  }
+
+  test("the driver finish leaves no persisted RDD after release") {
+    spark.catalog.clearCache()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val (labels, rounds, release) = Dedup.connectedComponentsStats(
+      pairsDf(Seq((1L, 2L), (2L, 3L))), nodes = Some(nodesDf(1L to 5L)))
+    assert(rounds === 1)
+    assert(labels.count() === 5)
+    assert(spark.sparkContext.getPersistentRDDs.keySet -- before !== Set.empty,
+      "the returned frame is persisted until released")
+    release()
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"leaked persisted RDDs: $leaked")
   }
