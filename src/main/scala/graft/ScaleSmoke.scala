@@ -625,6 +625,10 @@ object ScaleSmoke {
     // — the q49 shape at 20×. Pairs are materialized FIRST so the timed
     // number is cluster formation itself, and the corpus is adversarial
     // for it: every document sits in a ~mult-member near-dup clique.
+    // Its pairs fit the driver finish up to about 20× (934 194 pairs,
+    // recorded as 1 round); dedup_groups_fixpoint times the distributed
+    // fixpoint on the same pairs, whose rounds earlier artifacts recorded
+    // under dedup_groups.
     // (Ordered AFTER the similarity entries: an iterative operator's
     // burst of short jobs + released caches measurably inflates whatever
     // runs next in the same JVM — entries keep their round-6 neighbors so
@@ -646,6 +650,25 @@ object ScaleSmoke {
       record(Entry("dedup_groups", n, sec, rounds = Some(rounds),
         components = Some(nComponents)))
       relLabels()
+      // the same pairs through the distributed fixpoint alone: where the
+      // entry above finished on the driver (rounds = 1), this one prices
+      // the fixpoint beside it and keeps its rounds comparable with
+      // artifacts from before the driver finish existed
+      val t1 = System.nanoTime()
+      val (fixLabels, fixRounds, relFix) =
+        Dedup.connectedComponentsDistributed(pinned,
+          nodes = Some(docs.select(col("doc_id"))))
+      val nFix = fixLabels.count()
+      val fixSec = (System.nanoTime() - t1) / 1e9
+      val fixComponents = fixLabels.select("component").distinct().count()
+      relFix()
+      require(nFix == n && fixComponents == nComponents,
+        s"fixpoint labels $nFix rows / $fixComponents components, " +
+          s"dedup_groups $n / $nComponents")
+      println(f"[scale] dedup_groups_fixpoint       $nFix%10d rows  " +
+        f"$fixSec%8.2f s  ($fixComponents components, $fixRounds rounds)")
+      record(Entry("dedup_groups_fixpoint", nFix, fixSec,
+        rounds = Some(fixRounds), components = Some(fixComponents)))
       pinned.unpersist(blocking = false)
       System.gc() // drain the iterative burst before the skew audits
     }

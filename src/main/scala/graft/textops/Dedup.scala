@@ -1,6 +1,6 @@
 package graft.textops
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import org.apache.spark.storage.StorageLevel
@@ -22,10 +22,10 @@ import graft.functions.{AggExprs, ArrayExprs}
   * the corpus, an adversarial LSH collision) is DROPPED rather than
   * collected into one executor — bounded memory traded for recall on
   * pathological keys, the standard posture for fleet dedup jobs. One
-  * step does hold data on the driver: [[connectedComponents]] collects a
-  * pair set of at most [[driverEdgeLimit]] (2^20) edges and finishes the
-  * components there with a union-find; only a larger pair set runs the
-  * distributed fixpoint.
+  * step does hold data on the driver: [[connectedComponents]] counts the
+  * pairs, collects a pair set of at most [[driverEdgeLimit]] (2^20) edges
+  * and finishes the components there with a union-find; only a larger
+  * pair set runs the distributed fixpoint.
   *
   * Cache lifecycle: [[ngramJaccardPairs]], [[ngramJaccardPairsPrefix]] and
   * [[minhashLshPairs]] persist an intermediate (the shingle arrays /
@@ -421,16 +421,20 @@ object Dedup {
     * and c's "winner" inconsistently). Keep the rows whose
     * `component == id`, drop the rest.
     *
-    * Two finishes, chosen by the pair count the call observes. It first
-    * collects at most [[driverEdgeLimit]] + 1 edges. When the whole pair
-    * set fits (a curation pass over 1 000 documents has a few thousand
-    * pairs), a union-find over primitive arrays labels every endpoint on
-    * the driver, and one left join carries those labels onto the node
-    * universe: the driver then holds the edges, at most 2^20 of them
-    * (16 MB of longs plus the collected rows). A larger pair set, or ids
-    * that are not `long`, runs [[connectedComponentsDistributed]], the
-    * pointer-jumping fixpoint that holds no data on the driver; the pair
-    * plan's first edges are then read twice.
+    * Two finishes, chosen by the pair count the call observes. It caches
+    * the two id columns and counts them, so one number reaches the driver
+    * and either finish reads the cache, not the pair plan. At most
+    * [[driverEdgeLimit]] pairs (a curation pass over 1 000 documents has
+    * a few thousand) are collected as primitive arrays; a union-find
+    * labels every endpoint on the driver, and the broadcast (endpoint,
+    * label) arrays label the node universe in one lookup. The driver then
+    * holds 48 bytes per edge (the collected columns, their concatenation,
+    * its sorted copy) and 20 per endpoint (ids, parents, labels), plus the
+    * broadcast's serialized copy at 16 per endpoint: about 120 MiB at the
+    * limit when no two edges share an endpoint. A larger pair set runs
+    * [[connectedComponentsDistributed]], the pointer-jumping fixpoint
+    * that holds no data on the driver. Ids of any integral type take
+    * either finish, and the labels keep their type.
     *
     * `nodes` (optional) supplies the FULL node universe so isolated nodes
     * — documents with no near-dup pair — appear as singleton components.
@@ -465,8 +469,7 @@ object Dedup {
   /** [[connectedComponentsReleasable]] plus the number of rounds: the
     * propagation rounds the distributed fixpoint took (~log₂ of the worst
     * component diameter with pointer jumping; ScaleSmoke records it), or
-    * 1 for the driver finish, whose one round is the job that collects
-    * the edges.
+    * 1 for the driver finish, whose one round is the union-find.
     */
   def connectedComponentsStats(pairs: DataFrame,
       idA: String = "id_a", idB: String = "id_b",
@@ -475,7 +478,14 @@ object Dedup {
     componentsWithin(driverEdgeLimit, pairs, idA, idB, nodes, nodeCol,
       maxIter)
 
-  /** Most pair edges [[connectedComponentsStats]] finishes on the driver. */
+  /** Most pair edges [[connectedComponentsStats]] finishes on the driver:
+    * a bound on driver memory, not a speed cut-off. On 4 local cores the
+    * driver finish beat the fixpoint at every size measured up to 2^21
+    * edges (cliques of 20 ids: 1.5 against 4.8 s at 2^20 edges, 2.4
+    * against 5.7 s at 2^21; 2^20 edges on 2^21 distinct ids: 3.4 against
+    * 12.8 s). ScaleSmoke's 20× corpus (934 194 pairs) finishes on the
+    * driver; its 100× corpus (about 24 M pairs) runs the fixpoint.
+    */
   private[textops] val driverEdgeLimit: Int = 1 << 20
 
   /** [[connectedComponentsStats]] with the driver finish bounded by
@@ -484,40 +494,56 @@ object Dedup {
   private[textops] def componentsWithin(edgeLimit: Int, pairs: DataFrame,
       idA: String, idB: String, nodes: Option[DataFrame], nodeCol: String,
       maxIter: Int): (DataFrame, Int, () => Unit) = {
+    // the count ships one number to the driver and leaves the id pairs
+    // cached, so either finish reads the pair plan's result, not the plan
     val ids = pairs.select(col(idA), col(idB))
-    val edges =
-      if (ids.schema.forall(_.dataType == LongType))
-        Some(ids.limit(edgeLimit + 1).collect()).filter(_.length <= edgeLimit)
-      else None
-    edges match {
-      case Some(e) => componentsOnDriver(e, pairs.sparkSession, nodes, nodeCol)
-      case None => connectedComponentsDistributed(pairs, idA, idB, nodes,
-        nodeCol, maxIter)
-    }
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      if (ids.count() <= edgeLimit) componentsOnDriver(ids, nodes, nodeCol)
+      else connectedComponentsDistributed(ids, idA, idB, nodes, nodeCol,
+        maxIter)
+    } finally { ids.unpersist(blocking = false) }
   }
 
-  /** The driver finish: union-find labels for the collected `(id_a, id_b)`
-    * edges, left-joined onto `nodes` ∪ endpoints; a node without a label
-    * labels itself.
+  /** The driver finish over the two id columns of `ids`: collects them as
+    * primitive arrays (one pair per partition), labels every endpoint with
+    * [[unionFindLabels]] and broadcasts the sorted (endpoint, label)
+    * arrays; each node of `nodes` ∪ endpoints looks its label up there,
+    * and a node that is no endpoint labels itself. The labels keep the
+    * type of the id columns; the release handle also destroys the
+    * broadcast.
     */
-  private def componentsOnDriver(edges: Array[Row], sess: SparkSession,
-      nodes: Option[DataFrame], nodeCol: String): (DataFrame, Int, () => Unit) = {
+  private def componentsOnDriver(ids: DataFrame, nodes: Option[DataFrame],
+      nodeCol: String): (DataFrame, Int, () => Unit) = {
+    val sess = ids.sparkSession
     import sess.implicits._
-    val (ends, comps) =
-      unionFindLabels(edges.map(_.getLong(0)), edges.map(_.getLong(1)))
-    val labels = ends.zip(comps).toSeq.toDF("id", "component")
-    val labeled = nodes match {
-      case Some(n) =>
-        n.select(col(nodeCol).as("id")).unionByName(labels.select("id"))
-          .distinct()
-          .join(labels, Seq("id"), "left")
-          .select(col("id"), coalesce(col("component"), col("id"))
-            .as("component"))
-      case None => labels
+    val parts = ids.select(ids.columns.map(col(_).cast(LongType)): _*)
+      .as[(Long, Long)]
+      .mapPartitions { it =>
+        val a = Array.newBuilder[Long]
+        val b = Array.newBuilder[Long]
+        it.foreach { case (x, y) => a += x; b += y }
+        Iterator((a.result(), b.result()))
+      }.collect()
+    val table = sess.sparkContext.broadcast(unionFindLabels(
+      Array.concat(parts.map(_._1).toIndexedSeq: _*),
+      Array.concat(parts.map(_._2).toIndexedSeq: _*)))
+    val label = udf { (id: Long) =>
+      val (ends, comps) = table.value
+      val i = java.util.Arrays.binarySearch(ends, id)
+      if (i >= 0) comps(i) else id
     }
-    val out = labeled.persist(StorageLevel.MEMORY_AND_DISK)
+    val endpoints =
+      ids.select(explode(array(ids.columns.map(col).toIndexedSeq: _*)).as("id"))
+    val universe = nodes.fold(endpoints)(n =>
+      n.select(col(nodeCol).as("id")).unionByName(endpoints)).distinct()
+    val idType = universe.schema("id").dataType
+    val out = universe
+      .select(col("id"), label(col("id").cast(LongType)).cast(idType)
+        .as("component"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     out.count()
-    (out, 1, () => { out.unpersist(blocking = false); () })
+    (out, 1, () => { out.unpersist(blocking = false); table.destroy(); () })
   }
 
   /** The min-id component label of every endpoint of the edges
@@ -562,7 +588,7 @@ object Dedup {
     * per round. The per-round label frames are persisted and released
     * internally; only the returned frame's persist survives the call.
     */
-  private[textops] def connectedComponentsDistributed(pairs: DataFrame,
+  private[graft] def connectedComponentsDistributed(pairs: DataFrame,
       idA: String = "id_a", idB: String = "id_b",
       nodes: Option[DataFrame] = None, nodeCol: String = "doc_id",
       maxIter: Int = 25): (DataFrame, Int, () => Unit) = {

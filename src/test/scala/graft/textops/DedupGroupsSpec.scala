@@ -107,9 +107,24 @@ class DedupGroupsSpec extends SparkSpec {
       } finally { relDriver(); relDist() }
     }
     // without `nodes`, only endpoints are labeled
-    val (pairs, _) = graphs.head
+    val (pairs, nodes) = graphs.head
     assert(labelsOf(Dedup.connectedComponents(pairsDf(pairs))) ===
       unionFind(Nil, pairs))
+    // int ids finish on the driver too, and keep their type
+    val intPairs = pairs.map { case (a, b) => (a.toInt, b.toInt) }
+      .toDF("id_a", "id_b")
+    val intNodes = Some(nodes.map(_.toInt).toDF("doc_id"))
+    val (intDriver, intRounds, relInt) =
+      Dedup.connectedComponentsStats(intPairs, nodes = intNodes)
+    val (intDist, _, relIntDist) =
+      Dedup.connectedComponentsDistributed(intPairs, nodes = intNodes)
+    try {
+      assert(intRounds === 1)
+      assert(labelsOf(intDriver) === unionFind(nodes, pairs))
+      assert(intDriver.dtypes.toSeq ===
+        Seq("id" -> "IntegerType", "component" -> "IntegerType"))
+      assert(intDriver.dtypes === intDist.dtypes)
+    } finally { relInt(); relIntDist() }
   }
 
   test("more pairs than the driver limit take the distributed fixpoint") {
